@@ -9,12 +9,11 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // optional comma-separated query subset, for local iteration on one
     // operator without paying the full 48-query sweep (driver never sets it)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val spark = Sessions.builder(cpus).getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // --- cross-boot calibration probes (SCALING.md §r7 methodology) ---
     // Boot-to-boot variance on identical code measured 20-50% (dominant

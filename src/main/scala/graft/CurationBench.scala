@@ -116,9 +116,10 @@ object CurationBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000000)
     val nBatches = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.streaming.Monitor.RocksDbScaleConf
-      .foldLeft(Sessions.builder(cpus)) { case (b, (k, v)) => b.config(k, v) }
+      .foldLeft(Sessions.builder(Sessions.cpus)) {
+        case (b, (k, v)) => b.config(k, v)
+      }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

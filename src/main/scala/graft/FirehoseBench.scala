@@ -14,12 +14,12 @@ import graft.streaming.{CurationPipeline, JdbcUpsertSink, ParquetSink,
   * in ONE topology against one checkpoint root and one warehouse —
   * text gate → stateful LSH near-dup → semantic gate → warehouse
   * ([[graft.streaming.CurationPipeline]]), PLUS the cross-modal media
-  * dedup leg ([[graft.streaming.StreamMediaDedup]], image modality) and
-  * the embedding/semantic dedup leg
-  * ([[graft.streaming.StreamEmbedDedup]]) and the standing-index text
-  * leg ([[graft.streaming.StreamTextDedup]], consuming the same doc
-  * firehose as the curation pipeline) — where the r10 benches drove
-  * each tier separately ([[CurationBench]], [[MediaIngestBench]]), this
+  * dedup leg ([[graft.streaming.StreamMediaDedup.image]]) and the
+  * embedding/semantic dedup leg ([[graft.streaming.StreamEmbedDedup]])
+  * and the standing-index text leg ([[graft.streaming.StreamTextDedup]],
+  * consuming the same doc firehose as the curation pipeline) — three
+  * [[graft.streaming.IndexLeg]]s; where the r10 benches drove each tier
+  * separately ([[CurationBench]], [[IngestBench]]), this
   * is the production shape: one Spark session, all legs contending for
   * the same cores, all verdict/warehouse writes keyed-idempotent into
   * the SAME embedded Derby database (tables curated_docs /
@@ -75,9 +75,10 @@ object FirehoseBench {
     val nBatches = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val nMedia = args.drop(2).headOption.map(_.toInt).getOrElse(100000)
     val nVec = args.drop(3).headOption.map(_.toInt).getOrElse(100000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.streaming.Monitor.RocksDbScaleConf
-      .foldLeft(Sessions.builder(cpus)) { case (b, (k, v)) => b.config(k, v) }
+      .foldLeft(Sessions.builder(Sessions.cpus)) {
+        case (b, (k, v)) => b.config(k, v)
+      }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
@@ -103,7 +104,7 @@ object FirehoseBench {
     def writeMediaBatch(name: String, lo: Long, hi: Long): Path = {
       val dir = stage.resolve(name)
       spark.range(lo, hi, 1, 8)
-        .map { i => (mediaBase + i, MediaIngestBench.encodeFor(i),
+        .map { i => (mediaBase + i, IngestBench.encodeFor(i),
           new java.sql.Timestamp(1704100000000L + i * 100L)) }
         .toDF("media_id", "payload", "ts")
         .write.parquet(dir.toString)
@@ -117,12 +118,12 @@ object FirehoseBench {
     }
     val vecBatch = nVec / nBatches
     val vecBase = 10000000L
-    val nStanding = EmbedIngestBench.StandingVectors
+    val nStanding = IngestBench.StandingVectors
     def writeVecBatch(name: String, lo: Long, hi: Long): Path = {
       val dir = stage.resolve(name)
       spark.range(lo, hi, 1, 8)
         .map { i => (vecBase + i,
-          EmbedIngestBench.arrivalFor(i, nStanding).map(_.toFloat),
+          IngestBench.arrivalFor(i, nStanding).map(_.toFloat),
           new java.sql.Timestamp(1704100000000L + i * 100L)) }
         .toDF("vec_id", "embedding", "ts")
         .write.parquet(dir.toString)
@@ -232,7 +233,7 @@ object FirehoseBench {
 
     val mediaLeg = StreamMediaDedup.image(mediaSink,
       ImageDedup.hashRows(
-        ImageDedup.imageTable(spark, MediaIngestBench.StandingGroups)),
+        ImageDedup.imageTable(spark, IngestBench.StandingGroups)),
       ck.resolve("media-index").toString)
     val qm = mediaLeg.start(
       spark.readStream
@@ -241,7 +242,7 @@ object FirehoseBench {
       s"$ck/media")
 
     val standingVec = spark.range(0, nStanding.toLong, 1, 8)
-      .map(i => (i, EmbedIngestBench.vecFor(i)))
+      .map(i => (i, IngestBench.vecFor(i)))
       .toDF("vec_id", "emb")
       .withColumn("norm", sqrt(EmbedSim.dot(col("emb"), col("emb"))))
       .persist()

@@ -42,8 +42,8 @@ object MakeSf {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.drop(1).headOption.getOrElse("/tmp/graft_sf1")
     val mult = args.drop(2).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.builder(cpus).appName("graft-makesf").getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).appName("graft-makesf")
+      .getOrCreate()
 
     def load(t: String) = Tables.load(spark, src, t)
     def save(t: String, df: DataFrame, files: Int): Unit =

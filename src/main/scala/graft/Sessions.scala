@@ -8,6 +8,13 @@ import org.apache.spark.sql.SparkSession
   * cores, AQE on — on a real cluster these come from spark-submit conf).
   */
 object Sessions {
+
+  /** Local-mode core count for the mains: `SPARK_GRAFT_CPUS` when set,
+    * else every processor the JVM sees.
+    */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   def builder(cpus: String): SparkSession.Builder =
     withEnvOverrides(base(cpus))
 

@@ -76,7 +76,6 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(50000)
     val nBatches = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // RocksDB state store + changelog checkpointing (the reference's
     // backend, faust_app.py:25): the default HDFS-backed provider clones
     // the full in-memory state map every micro-batch, and even RocksDB
@@ -84,7 +83,7 @@ object StreamBench {
     // either way batch time scales with TOTAL accumulated state. Changelog
     // checkpointing commits only the batch's delta: the only shape that
     // survives unbounded streams. See Monitor.RocksDbScaleConf.
-    val builder0 = Sessions.builder(cpus)
+    val builder0 = Sessions.builder(Sessions.cpus)
     val spark = graft.streaming.Monitor.RocksDbScaleConf
       .foldLeft(builder0) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()

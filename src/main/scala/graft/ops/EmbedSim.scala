@@ -466,7 +466,8 @@ object EmbedSim {
   /** The two-frame form of [[semDedupIncremental]]: per-vector SemDeDup
     * verdicts for an explicit assigned `fresh` batch against an explicit
     * assigned standing `index` frame — the per-micro-batch call of the
-    * streaming embedding ingest ([[graft.streaming.StreamEmbedDedup]]),
+    * streaming embedding ingest (the [[graft.streaming.IndexLeg]] that
+    * [[graft.streaming.StreamEmbedDedup]] builds),
     * mirroring [[Perceptual.bandedDupsFromBands]] so batch and streaming
     * verdicts share one cosine/threshold implementation and cannot
     * drift. Both frames carry (vec_id, emb, norm, centroid_id); ids

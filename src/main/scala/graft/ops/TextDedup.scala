@@ -280,8 +280,9 @@ object TextDedup {
 
   /** The two-frame form of [[incrementalDups]], over ALREADY
     * band-exploded rows that CARRY their shingle sets ((doc_id, band,
-    * shingles) — the stored shape of the streaming text leg's durable
-    * standing index, [[graft.streaming.StreamTextDedup]]): candidates
+    * shingles) — the stored shape of the durable standing index of the
+    * text [[graft.streaming.IndexLeg]] that
+    * [[graft.streaming.StreamTextDedup]] builds): candidates
     * from shared band keys with the hot-band cap decided on the index
     * side, verification by the SAME exact shingle-set jaccard the batch
     * operator runs, so streaming and batch verdicts cannot drift.

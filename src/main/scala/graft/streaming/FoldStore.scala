@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** The durable standing-index store behind the streaming dedup legs
-  * ([[StreamMediaDedup]], [[StreamEmbedDedup]], [[StreamTextDedup]]): a
+  * ([[IndexLeg]], built by [[StreamMediaDedup]], [[StreamEmbedDedup]]
+  * and [[StreamTextDedup]]): a
   * log of immutable parquet SEGMENTS governed by a single atomic
   * MANIFEST, hash-prefix partitioned so each micro-batch's index consult
   * prunes to the files that can possibly match.

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.EmbedSim
 
@@ -34,152 +33,55 @@ import graft.ops.EmbedSim
   *    fold into the index.
   *
   * State shape: the standing assignment (vec_id, emb, norm,
-  * centroid_id) lives in a durable [[FoldStore]] partitioned by a hash
-  * prefix of `centroid_id` — which makes the per-batch consult a
-  * file-granularity INVERTED-LIST read: a micro-batch touching k
-  * centroids reads those centroids' list shards and nothing else, the
-  * on-disk analog of an IVF probe. Restart recovery, the durable
-  * replay-guarded fold, and segment compaction all come from the store
-  * (shared with [[StreamMediaDedup]]).
-  *
-  * Delivery: verdicts are a pure function of (standing index MINUS the
-  * batch's own ids, batch) — the self-exclusion is the r12 replay
-  * shield: a batch replayed after its fold committed (crash between
-  * `store.append` and the checkpoint commit) would otherwise find its
-  * own kept vectors standing, self-match at cos 1, and flip every kept
-  * vector to keep=false, which a keyed sink would overwrite over the
-  * correct verdict; with the shield the replay sees exactly the
-  * pre-fold lists and re-emits identical rows (T1, spec-pinned on
-  * verdict content). The fold is double-guarded: the durable
-  * `lastFoldedId` stops a same-id replay, and an anti-join against ids
-  * already standing in the touched lists stops a re-delivery under a
-  * NEW batch id from planting same-id twins in the index (harmless for
-  * keep bits, corrupting for any downstream per-list statistics).
-  *
-  * @param centroids frozen trained centroid frame (centroid_id, cemb,
-  *                  cnorm) — small (C ≈ √n), persisted here and
-  *                  broadcast into each batch's assignment
+  * centroid_id) lives in the [[IndexLeg]]'s durable store partitioned
+  * by a hash prefix of `centroid_id` — which makes the per-batch
+  * consult a file-granularity INVERTED-LIST read: a micro-batch
+  * touching k centroids reads those centroids' list shards and nothing
+  * else, the on-disk analog of an IVF probe. The batch body, replay
+  * shield and fold guards are [[IndexLeg]]'s; this leg folds its KEPT
+  * vectors, and its index holds one row per vector, so `indexSize`
+  * counts rows (a same-id twin would show).
   */
-final class StreamEmbedDedup private (
-    verdictSink: BatchSink,
-    private[graft] val store: FoldStore,
-    centroids: DataFrame,
-    threshold: Double) {
-
-  private val frozen = centroids.persist(StorageLevel.MEMORY_AND_DISK)
-
-  /** Vectors currently standing in the index (diagnostic). */
-  def indexSize: Long = store.read().count()
-
-  /** Start the leg over a streaming (vec_id, embedding, ts) frame.
-    * Arriving ids must be disjoint from the standing index's and from
-    * earlier batches' (any real ingest keys vectors uniquely).
-    */
-  def start(vectors: DataFrame, checkpointDir: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        processBatch(batch.toDF(), id)
-      }
-      .start()
-
-  /** One micro-batch: assign to the frozen centroids once, judge
-    * against the pruned standing lists, emit verdicts, fold the kept
-    * vectors in. Exposed for the parity spec (same body the streaming
-    * query runs).
-    */
-  private[graft] def processBatch(b: DataFrame, id: Long): Unit = {
-    val batch = b.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (batch.count() > 0) {
-        // persisted: the assigned batch feeds both self-join sides, the
-        // index join, the verdict spine, and the fold — an unpersisted
-        // frame would re-run the broadcast-argmax assignment per consumer
-        val incr = EmbedSim.assignTo(
-            batch.select(col("vec_id"),
-                col("embedding").cast("array<double>").as("emb"))
-              .withColumn("norm",
-                sqrt(EmbedSim.dot(col("emb"), col("emb")))),
-            frozen)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // the touched centroids' hash-prefix buckets — the IVF probe's
-        // file-prune decision, bounded by the store's prefixParts
-        val pks = incr.select(StreamEmbedDedup.pkOf).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        // batch-lifetime cache of the pruned list read (unpersisted
-        // below): folds append one small file per touched bucket, so an
-        // uncached consult would re-open every pruned segment file per
-        // consumer as the segment count grows
-        val pruned = store.readFor(pks)
-          .select(col("vec_id"), col("emb"), col("norm"),
-            col("centroid_id"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val batchIds = incr.select(col("vec_id")).distinct()
-        // replay shield: a batch replayed after its fold committed must
-        // see the PRE-fold lists — its own ids (present only on such a
-        // replay) are excluded before judging; the id set is batch-sized
-        val index = pruned.join(broadcast(batchIds),
-          Seq("vec_id"), "left_anti")
-        val verdicts = EmbedSim.semVerdictsAgainst(index, incr, threshold)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val out = batch.select(col("vec_id"), col("ts"))
-          .join(verdicts, Seq("vec_id"))
-          .select(col("vec_id").cast("string").as("vec_key"),
-            col("vec_id"), col("ts"), col("centroid_id"), col("keep"),
-            col("matched_id"), col("score"))
-        verdictSink.write(out, id)
-        // fold the batch's canonical (kept) vectors into the standing
-        // assignment as ONE durable increment-sized segment; the
-        // anti-join stops a re-delivery under a NEW batch id from
-        // planting same-id twins (alreadyStanding is empty in normal
-        // disjoint-id operation)
-        if (id > store.lastFoldedId) {
-          val alreadyStanding = pruned.select(col("vec_id"))
-            .join(broadcast(batchIds), Seq("vec_id"), "left_semi")
-            .distinct()
-          val keep = incr.join(
-              verdicts.filter(col("keep")).select(col("vec_id")),
-              Seq("vec_id"), "leftsemi")
-            .join(broadcast(alreadyStanding), Seq("vec_id"), "left_anti")
-          store.append(keep.withColumn("pk", StreamEmbedDedup.pkOf), id)
-        }
-        verdicts.unpersist()
-        pruned.unpersist()
-        incr.unpersist()
-      }
-    } finally { batch.unpersist(); () }
-  }
-
-  /** Release the persisted centroid frame and the durable store's
-    * writer lock (the index itself stays on disk).
-    */
-  def close(): Unit = {
-    try frozen.unpersist(false) catch { case _: Throwable => () }
-    store.close()
-  }
-}
-
 object StreamEmbedDedup {
-
-  /** Hash-prefix bucket count of the durable list layout (the shard
-    * count of the object-store prefix at deployment scale).
-    */
-  val PrefixParts = 64
-
-  private[streaming] def pkOf =
-    FoldStore.pk(PrefixParts, col("centroid_id"))
 
   /** Open the leg over a durable index at `indexDir`, seeding it from
     * `standingAssigned` (the batch tier's standing IVF assignment,
     * (vec_id, emb, norm, centroid_id)) only when the directory holds no
-    * index yet — a restart adopts the durable state.
+    * index yet — a restart adopts the durable state. The leg runs over
+    * a streaming (vec_id, embedding, ts) frame.
+    *
+    * @param centroids frozen trained centroid frame (centroid_id, cemb,
+    *                  cnorm) — small (C ≈ √n), pinned for the leg's
+    *                  lifetime and broadcast into each batch's
+    *                  assignment
     */
   def apply(verdictSink: BatchSink, centroids: DataFrame,
       standingAssigned: => DataFrame, indexDir: String,
-      threshold: Double = EmbedSim.DupThreshold): StreamEmbedDedup = {
-    val store = FoldStore.open(centroids.sparkSession, indexDir,
-      standingAssigned.withColumn("pk", pkOf), PrefixParts,
-      compactAfter = StreamMediaDedup.CompactAfter)
-    new StreamEmbedDedup(verdictSink, store, centroids, threshold)
+      threshold: Double = EmbedSim.DupThreshold): IndexLeg = {
+    val frozen = centroids.persist(StorageLevel.MEMORY_AND_DISK)
+    IndexLeg.open(centroids.sparkSession, verdictSink, standingAssigned,
+      indexDir, IndexLeg.Spec(
+        idCol = "vec_id",
+        // assign to the frozen centroids once per batch
+        sign = batch => EmbedSim.assignTo(
+          batch.select(col("vec_id"),
+              col("embedding").cast("array<double>").as("emb"))
+            .withColumn("norm", sqrt(EmbedSim.dot(col("emb"), col("emb")))),
+          frozen),
+        toStored = _.withColumn("pk",
+          FoldStore.pk(IndexLeg.PrefixParts, col("centroid_id"))),
+        judge = (index, incr) =>
+          EmbedSim.semVerdictsAgainst(index, incr, threshold),
+        verdicts = (batch, _, verdicts) =>
+          batch.select(col("vec_id"), col("ts"))
+            .join(verdicts, Seq("vec_id"))
+            .select(col("vec_id").cast("string").as("vec_key"),
+              col("vec_id"), col("ts"), col("centroid_id"), col("keep"),
+              col("matched_id"), col("score")),
+        canonical = (incr, verdicts) => incr.join(
+          verdicts.filter(col("keep")).select(col("vec_id")),
+          Seq("vec_id"), "leftsemi"),
+        rowPerItem = true,
+        pinned = Seq(frozen)))
   }
 }

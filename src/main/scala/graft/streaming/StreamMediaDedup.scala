@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.{AudioDedup, ImageDedup, Perceptual, VideoDedup}
 
@@ -21,13 +19,11 @@ import graft.ops.{AudioDedup, ImageDedup, Perceptual, VideoDedup}
   * batch N+1 sees batch N's canonical assets — exactly how a
   * production media ingest maintains its perceptual index.
   *
-  * Construct via the companion: [[StreamMediaDedup.image]] /
-  * [[StreamMediaDedup.audio]] (banded hamming; verdict `score` = the
-  * best match's hamming distance) / [[StreamMediaDedup.video]]
-  * (frame-set containment; `score` = the best match's overlap
-  * fraction). The class itself is modality-agnostic over three
-  * functions: the fingerprint projection, the stored-index-row
-  * projection, and the best-match pairing.
+  * Factories: [[StreamMediaDedup.image]] / [[StreamMediaDedup.audio]]
+  * (banded hamming; verdict `score` = the best match's hamming
+  * distance) / [[StreamMediaDedup.video]] (frame-set containment;
+  * `score` = the best match's overlap fraction). Each returns an
+  * [[IndexLeg]] over a streaming (media_id, payload, ts) frame.
   *
   * Verdict semantics per arriving asset:
   *  - `is_dup` — some indexed asset cleared the modality's threshold;
@@ -49,186 +45,15 @@ import graft.ops.{AudioDedup, ImageDedup, Perceptual, VideoDedup}
   * carry far higher within-batch dup rates than keyed media ingests,
   * where an asset id arrives once by contract.
   *
-  * State shape (r11, the durable [[FoldStore]]): the standing index
-  * lives as hash-prefix-partitioned parquet segments under the leg's
-  * `indexDir` — seeded from the constructor's standing index the first
-  * time, appended one increment-sized segment per micro-batch,
-  * compacted when the segment count passes the store's bound. Three
-  * properties the pre-r11 in-memory leaf chain lacked:
-  *
-  *  - '''restart recovery''': on a driver restart the constructor
-  *    adopts the store's manifest (segments + lastFoldedId), so every
-  *    committed batch's canonical fingerprints survive a crash and a
-  *    re-upload of a pre-crash asset is still flagged;
-  *  - '''bounded per-batch plan cost''': the index is read as ONE
-  *    multi-path parquet datasource (constant plan width; small files
-  *    pack into few tasks), instead of one cached leaf + 32 task
-  *    launches per elapsed batch — the measured cause of the r10 video
-  *    ledger's 3.5 → 7.1 s batch-time growth;
-  *  - '''file-granularity pruning''': the store partitions index rows
-  *    by a hash prefix of the CONSULT key (band key for image/audio —
-  *    the rows are stored band-exploded, i.e. as the LSH inverted index
-  *    itself; frame hash for video), and each batch's consult reads
-  *    only the prefix buckets its keys touch ([[FoldStore.readFor]]) —
-  *    the per-batch cost is bounded by the batch's key spread, not by
-  *    standing-index history.
-  *
-  * Delivery: the verdict sink sees every batch at-least-once; verdicts
-  * are a pure function of (standing index MINUS the batch's own ids,
-  * batch) — the self-exclusion is the r12 replay shield: a batch
-  * replayed AFTER its fold committed (crash in the window between
-  * `store.append` and the checkpoint commit — exactly the window the
-  * durable guard exists for) would otherwise be judged against an index
-  * containing its own kept fingerprints, self-match at distance 0, and
-  * flip every kept asset to dup-of-itself, which a keyed sink would
-  * overwrite over the correct verdict. With the shield the replayed
-  * batch sees precisely the pre-fold index (nothing else can have
-  * folded in between — foreachBatch serializes batches) and re-emits
-  * byte-identical rows (T1; pinned by the replay spec on verdict
-  * CONTENT, not counts). The index FOLD is double-guarded: the store's
-  * durable `lastFoldedId` stops a same-id replay, and an anti-join
-  * against the ids already standing in the touched buckets stops a
-  * re-delivery under a NEW batch id (at-least-once file re-appearance)
-  * from planting twin fingerprints — which the banded tiers absorb
-  * (candidates are distinct-ed) but the containment tier does NOT
-  * (duplicated index rows double the per-pair shared counts and can
-  * push overlap past 1).
-  *
-  * @param hashRows  the modality's scan-side fingerprint projection
-  *                  ((media_id, payload) → fingerprint-row shape)
-  * @param toStored  fingerprint rows → the store's index-row shape
-  *                  (band-exploded for image/audio) incl. the int `pk`
-  *                  hash-prefix partition column
-  * @param bestMatch (pruned stored index, batch fingerprints) →
-  *                  (media_id, matched_id, score) — the modality's
-  *                  two-frame incremental operator reduced to the best
-  *                  standing match per arriving asset
+  * State shape: the [[IndexLeg]]'s durable store, partitioned by a
+  * hash prefix of the CONSULT key — band key for image/audio (the rows
+  * are stored band-exploded, i.e. as the LSH inverted index itself),
+  * frame hash for video. The batch body, replay shield and fold guards
+  * are [[IndexLeg]]'s; the already-standing fold guard matters most
+  * here, because duplicated frame rows would double the containment
+  * tier's per-pair shared counts.
   */
-final class StreamMediaDedup private (
-    verdictSink: BatchSink,
-    private[graft] val store: FoldStore,
-    hashRows: DataFrame => DataFrame,
-    toStored: DataFrame => DataFrame,
-    bestMatch: (DataFrame, DataFrame) => DataFrame) {
-
-  /** Distinct assets currently standing in the index (diagnostic). */
-  def indexSize: Long = store.assets("media_id")
-
-  /** Start the leg over a streaming (media_id, payload, ts) frame.
-    * Arriving ids must be disjoint from the standing index's and from
-    * earlier batches' (any real ingest keys assets uniquely).
-    */
-  def start(media: DataFrame, checkpointDir: String): StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        processBatch(batch.toDF(), id)
-      }
-      .start()
-
-  /** One micro-batch: decode+hash once, pair against the pruned
-    * standing index, emit verdicts, fold the batch's canonical
-    * fingerprints in. Exposed for the parity spec (same body the
-    * streaming query runs).
-    */
-  private[graft] def processBatch(b: DataFrame, id: Long): Unit = {
-    val batch = b.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (batch.count() > 0) {
-        val hashes = hashRows(
-            batch.select(col("media_id"), col("payload")))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // the batch's touched hash-prefix buckets — a bounded (<=
-        // prefixParts) driver-side set, the partition-prune decision
-        // exactly like a DPP subquery's; every index row that can share
-        // a consult key with the batch lives in one of these buckets
-        val pks = toStored(hashes).select(col("pk")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        // the pruned index read is persisted for THIS batch only (and
-        // unpersisted below): the pairing core consumes the index side
-        // twice (hot-bucket cap + candidate join), and without the cache
-        // each consumer would re-open every pruned segment file — the
-        // growth term a 20-batch image run measured before this cache
-        // (batch seconds 4.1 -> 7.8 as the file count grew)
-        val pruned = store.readFor(pks).persist(StorageLevel.MEMORY_AND_DISK)
-        val batchIds = hashes.select(col("media_id")).distinct()
-        // replay shield: a batch replayed after its fold committed must
-        // see the PRE-fold index, so its own ids (present only on such a
-        // replay — arriving ids are otherwise disjoint by contract) are
-        // excluded before pairing; broadcast: the id set is batch-sized
-        val index = pruned.join(broadcast(batchIds),
-          Seq("media_id"), "left_anti")
-        // persisted: best feeds both the verdict join and the index-fold
-        // anti-join — without it each consumer would re-run the pairing
-        val best = bestMatch(index, hashes)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // decoded = the projection produced at least one fingerprint row
-        // for the asset (a distinct, NOT a join on the row-per-
-        // fingerprint frame — a clip's many frame rows must not explode
-        // verdicts)
-        val present = hashes.select(col("media_id")).distinct()
-          .withColumn("_dec", lit(true))
-        val verdicts = batch.select(col("media_id"), col("ts"))
-          .join(present, Seq("media_id"), "left")
-          .join(best, Seq("media_id"), "left")
-          .select(col("media_id").cast("string").as("media_key"),
-            col("media_id"), col("ts"),
-            coalesce(col("_dec"), lit(false)).as("decoded"),
-            col("matched_id").isNotNull.as("is_dup"),
-            col("matched_id"), col("score"))
-        verdictSink.write(verdicts, id)
-        // fold the batch's canonical (non-dup, decodable) fingerprints
-        // into the standing index as ONE durable increment-sized
-        // segment; the second anti-join is the new-batch-id replay
-        // guard — an id already standing in the touched buckets (a
-        // re-delivered file under a fresh batch id) must never fold
-        // twin rows (alreadyStanding is empty in normal operation and
-        // batch-bounded on a re-delivery, so the broadcast is safe)
-        if (id > store.lastFoldedId) {
-          val alreadyStanding = pruned.select(col("media_id"))
-            .join(broadcast(batchIds), Seq("media_id"), "left_semi")
-            .distinct()
-          val keep = hashes
-            .join(best.select(col("media_id")), Seq("media_id"), "left_anti")
-            .join(broadcast(alreadyStanding), Seq("media_id"), "left_anti")
-          store.append(toStored(keep), id)
-        }
-        best.unpersist()
-        pruned.unpersist()
-        hashes.unpersist()
-      }
-    } finally { batch.unpersist(); () }
-  }
-
-  /** Release the durable store's writer lock (the index itself stays
-    * on disk; reopen the leg on the same directory to resume).
-    */
-  def close(): Unit = store.close()
-}
-
 object StreamMediaDedup {
-
-  /** Hash-prefix bucket count of the durable index layout (the shard
-    * count of the object-store prefix at deployment scale).
-    */
-  val PrefixParts = 64
-
-  /** Segment-count compaction bound: each fold appends up to
-    * [[PrefixParts]] small files (one per touched bucket), so the
-    * per-batch consult's footer-open cost grows with the live segment
-    * count — compacting every [[CompactAfter]] folds keeps the file
-    * count bounded at ~(CompactAfter+1)·PrefixParts while the rewrite
-    * stays rare. Rare-full-merge beat fanout-2 generational tiering in
-    * a measured r11 A/B at these increment-heavy shapes (SCALING r11
-    * addendum 2); the refinement for regimes where one merge would
-    * stall a batch is per-pk-bucket incremental compaction, not
-    * finer-grained whole-segment tiering. Env-overridable
-    * (SPARK_GRAFT_COMPACT_AFTER) — the right threshold trades
-    * steady-state consult file count against amortized rewrite bytes,
-    * which is deployment-shape-dependent (increment:corpus ratio).
-    */
-  val CompactAfter: Int =
-    sys.env.get("SPARK_GRAFT_COMPACT_AFTER").map(_.toInt).getOrElse(8)
 
   /** Stored index-row shape for the banded modalities: the band-exploded
     * LSH inverted index (media_id, i, bv, h) + the (i, bv) hash-prefix
@@ -237,7 +62,8 @@ object StreamMediaDedup {
   private def bandedStored(bands: Int, bandBits: Int)(
       hashes: DataFrame): DataFrame =
     Perceptual.bandRows(hashes, "media_id", bands, bandBits)
-      .withColumn("pk", FoldStore.pk(PrefixParts, col("i"), col("bv")))
+      .withColumn("pk",
+        FoldStore.pk(IndexLeg.PrefixParts, col("i"), col("bv")))
 
   /** Best banded-hamming match per arriving asset: min (hamming, id). */
   private def bandedBest(bands: Int, bandBits: Int, maxHamming: Int)(
@@ -251,15 +77,28 @@ object StreamMediaDedup {
       .select(col("media_id"), col("m.indexed_id").as("matched_id"),
         col("m.hamming").cast("double").as("score"))
 
+  /** A media leg's spec: scan-side fingerprints of (media_id, payload),
+    * best-match verdicts (decoded, is_dup, matched_id, score), and a
+    * fold of the unmatched fingerprints.
+    */
+  private def spec(hashRows: DataFrame => DataFrame,
+      toStored: DataFrame => DataFrame,
+      bestMatch: (DataFrame, DataFrame) => DataFrame): IndexLeg.Spec =
+    IndexLeg.Spec(
+      idCol = "media_id",
+      sign = batch => hashRows(batch.select(col("media_id"), col("payload"))),
+      toStored = toStored,
+      judge = bestMatch,
+      verdicts = IndexLeg.bestMatchVerdicts("media_id", "media_key",
+        "decoded", "score"),
+      canonical = IndexLeg.unmatched("media_id"))
+
   private def banded(verdictSink: BatchSink, standingIndex: DataFrame,
       indexDir: String, hashRows: DataFrame => DataFrame,
-      bands: Int, bandBits: Int, maxHamming: Int): StreamMediaDedup = {
-    val toStored = bandedStored(bands, bandBits) _
-    val store = FoldStore.open(standingIndex.sparkSession, indexDir,
-      toStored(standingIndex), PrefixParts, compactAfter = CompactAfter)
-    new StreamMediaDedup(verdictSink, store, hashRows, toStored,
-      bandedBest(bands, bandBits, maxHamming))
-  }
+      bands: Int, bandBits: Int, maxHamming: Int): IndexLeg =
+    IndexLeg.open(standingIndex.sparkSession, verdictSink, standingIndex,
+      indexDir, spec(hashRows, bandedStored(bands, bandBits),
+        bandedBest(bands, bandBits, maxHamming)))
 
   /** Image leg: dHash fingerprints, banded hamming. `indexDir` is the
     * leg's durable index root — pass the same directory on restart to
@@ -267,14 +106,14 @@ object StreamMediaDedup {
     */
   def image(verdictSink: BatchSink, standingIndex: DataFrame,
       indexDir: String,
-      maxHamming: Int = ImageDedup.ImgHamMax): StreamMediaDedup =
+      maxHamming: Int = ImageDedup.ImgHamMax): IndexLeg =
     banded(verdictSink, standingIndex, indexDir, ImageDedup.hashRows,
       ImageDedup.ImgBands, ImageDedup.ImgBandBits, maxHamming)
 
   /** Audio leg: energy-delta fingerprints, banded hamming. */
   def audio(verdictSink: BatchSink, standingIndex: DataFrame,
       indexDir: String,
-      maxHamming: Int = AudioDedup.AudHamMax): StreamMediaDedup =
+      maxHamming: Int = AudioDedup.AudHamMax): IndexLeg =
     banded(verdictSink, standingIndex, indexDir, AudioDedup.hashRows,
       AudioDedup.AudBands, AudioDedup.AudBandBits, maxHamming)
 
@@ -284,20 +123,17 @@ object StreamMediaDedup {
     */
   def video(verdictSink: BatchSink, standingIndex: DataFrame,
       indexDir: String,
-      overlapMin: Double = VideoDedup.OverlapMin): StreamMediaDedup = {
-    val toStored = (hashes: DataFrame) =>
-      hashes.withColumn("pk", FoldStore.pk(PrefixParts, col("h")))
-    val store = FoldStore.open(standingIndex.sparkSession, indexDir,
-      toStored(standingIndex), PrefixParts, compactAfter = CompactAfter)
-    new StreamMediaDedup(verdictSink, store, VideoDedup.hashRows, toStored,
-      (index, fresh) =>
-        VideoDedup.videoDupsAgainst(
-            index.select(col("media_id"), col("h"), col("n")), fresh,
-            overlapMin)
-          .groupBy(col("new_id").as("media_id"))
-          .agg(min(struct((-col("overlap")).as("_neg"),
-            col("indexed_id"))).as("m"))
-          .select(col("media_id"), col("m.indexed_id").as("matched_id"),
-            (-col("m._neg")).as("score")))
-  }
+      overlapMin: Double = VideoDedup.OverlapMin): IndexLeg =
+    IndexLeg.open(standingIndex.sparkSession, verdictSink, standingIndex,
+      indexDir, spec(VideoDedup.hashRows,
+        _.withColumn("pk", FoldStore.pk(IndexLeg.PrefixParts, col("h"))),
+        (index, fresh) =>
+          VideoDedup.videoDupsAgainst(
+              index.select(col("media_id"), col("h"), col("n")), fresh,
+              overlapMin)
+            .groupBy(col("new_id").as("media_id"))
+            .agg(min(struct((-col("overlap")).as("_neg"),
+              col("indexed_id"))).as("m"))
+            .select(col("media_id"), col("m.indexed_id").as("matched_id"),
+              (-col("m._neg")).as("score"))))
 }

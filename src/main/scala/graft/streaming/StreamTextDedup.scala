@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.TextDedup
 
@@ -38,13 +36,10 @@ import graft.ops.TextDedup
   *  - duplicates are detected and reported, NOT silently dropped —
   *    the same detect-don't-drop stance as the other legs.
   *
-  * State shape: the standing index lives in a durable [[FoldStore]] —
-  * band-exploded signature rows (doc_id, band, shingles),
-  * hash-prefix-partitioned by band key, so each micro-batch's consult
-  * prunes to the band buckets it touches at file granularity; restart
-  * recovery, the durable replay-guarded fold, and segment compaction
-  * are the store's (shared with [[StreamMediaDedup]] /
-  * [[StreamEmbedDedup]]).
+  * State shape: band-exploded signature rows (doc_id, band, shingles)
+  * in the [[IndexLeg]]'s durable store, hash-prefix-partitioned by
+  * band key; the batch body, replay shield and fold guards are
+  * [[IndexLeg]]'s.
   *
   * Within-batch pairs are NOT this leg's verdict surface
   * ([[StreamNearDup]] owns in-window pairing) — but the FOLD dedups
@@ -56,121 +51,11 @@ import graft.ops.TextDedup
   * simplification as [[graft.ops.EmbedSim.semVerdictsAgainst]]'s
   * vsBatch leg (a doc dropped from the fold still counts as a
   * smaller-id blocker for later ids).
-  *
-  * Delivery: verdicts are a pure function of (standing index MINUS the
-  * batch's own ids, batch) — the self-exclusion is the r12 replay
-  * shield: a batch replayed after its fold committed would otherwise
-  * find its own kept signatures standing, self-match at jaccard 1, and
-  * flip every kept doc to dup-of-itself; with the shield the replay
-  * sees exactly the pre-fold index and re-emits identical rows (T1,
-  * spec-pinned on verdict content). The fold is double-guarded: the
-  * durable `lastFoldedId` stops a same-id replay, and an anti-join
-  * against doc ids already standing in the touched buckets stops a
-  * re-delivery under a NEW batch id from planting twin signature rows.
   */
-final class StreamTextDedup private (
-    verdictSink: BatchSink,
-    private[graft] val store: FoldStore,
-    minJaccard: Double) {
-
-  /** Distinct documents currently standing in the index (diagnostic). */
-  def indexSize: Long = store.assets("doc_id")
-
-  /** Start the leg over a streaming (doc_id, text, ts) frame. Arriving
-    * ids must be disjoint from the standing index's and from earlier
-    * batches' (any real ingest keys documents uniquely).
-    */
-  def start(docs: DataFrame, checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        processBatch(batch.toDF(), id)
-      }
-      .start()
-
-  /** One micro-batch: signature once, pair against the pruned standing
-    * band index, emit verdicts, fold the batch's canonical signatures
-    * in. Exposed for the parity spec (same body the streaming query
-    * runs).
-    */
-  private[graft] def processBatch(b: DataFrame, id: Long): Unit = {
-    val batch = b.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (batch.count() > 0) {
-        val fresh = StreamTextDedup.sigRows(
-            batch.select(col("doc_id"), col("text")))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val pks = fresh.select(StreamTextDedup.pkOf).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        // batch-lifetime cache of the pruned band-index read (the
-        // pairing core consumes the index side twice — cap + candidate
-        // join; see StreamMediaDedup for the measured rationale)
-        val pruned = store.readFor(pks)
-          .select(col("doc_id"), col("band"), col("shingles"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val batchIds = fresh.select(col("doc_id")).distinct()
-        // replay shield: a batch replayed after its fold committed must
-        // see the PRE-fold index — its own ids (present only on such a
-        // replay) are excluded before pairing; the id set is batch-sized
-        val index = pruned.join(broadcast(batchIds),
-          Seq("doc_id"), "left_anti")
-        val best = TextDedup.incrementalDupsFromBands(index, fresh,
-            minJaccard)
-          .groupBy(col("new_id").as("doc_id"))
-          .agg(min(struct((-col("jaccard")).as("_nj"),
-            col("indexed_id"))).as("m"))
-          .select(col("doc_id"), col("m.indexed_id").as("matched_id"),
-            (-col("m._nj")).as("jaccard"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val present = fresh.select(col("doc_id")).distinct()
-          .withColumn("_sig", lit(true))
-        val verdicts = batch.select(col("doc_id"), col("ts"))
-          .join(present, Seq("doc_id"), "left")
-          .join(best, Seq("doc_id"), "left")
-          .select(col("doc_id").cast("string").as("doc_key"),
-            col("doc_id"), col("ts"),
-            coalesce(col("_sig"), lit(false)).as("has_sig"),
-            col("matched_id").isNotNull.as("is_dup"),
-            col("matched_id"), col("jaccard"))
-        verdictSink.write(verdicts, id)
-        // fold the batch's canonical (non-dup, signatured) band rows
-        // into the standing index as ONE durable increment-sized
-        // segment — minus within-batch near-dups (min-id member wins:
-        // the same pairing core run fresh-vs-fresh, so two near-copies
-        // arriving together cannot BOTH become canonical) and minus ids
-        // already standing in the touched buckets (the new-batch-id
-        // re-delivery guard; empty in normal disjoint-id operation)
-        if (id > store.lastFoldedId) {
-          // lazy — the broadcast below is its single evaluation
-          val withinDup = StreamTextDedup.withinBatchDups(fresh, minJaccard)
-          val alreadyStanding = pruned.select(col("doc_id"))
-            .join(broadcast(batchIds), Seq("doc_id"), "left_semi")
-            .distinct()
-          val keep = fresh
-            .join(best.select(col("doc_id")), Seq("doc_id"), "left_anti")
-            .join(broadcast(withinDup), Seq("doc_id"), "left_anti")
-            .join(broadcast(alreadyStanding), Seq("doc_id"), "left_anti")
-          store.append(keep.withColumn("pk", StreamTextDedup.pkOf), id)
-        }
-        best.unpersist()
-        pruned.unpersist()
-        fresh.unpersist()
-      }
-    } finally { batch.unpersist(); () }
-  }
-
-  /** Release the durable store's writer lock (the index itself stays
-    * on disk).
-    */
-  def close(): Unit = store.close()
-}
-
 object StreamTextDedup {
 
-  /** Hash-prefix bucket count of the durable band-index layout. */
-  val PrefixParts = 64
-
-  private[streaming] def pkOf = FoldStore.pk(PrefixParts, col("band"))
+  private def toStored(fresh: DataFrame): DataFrame =
+    fresh.withColumn("pk", FoldStore.pk(IndexLeg.PrefixParts, col("band")))
 
   /** The fold's within-batch dedup set: doc ids that must NOT fold
     * because a smaller-id member of the SAME batch carries the same or
@@ -251,14 +136,33 @@ object StreamTextDedup {
   /** Open the leg over a durable band index at `indexDir`, seeding it
     * from `standingDocs` ((doc_id, text) — the curated standing corpus)
     * only when the directory holds no index yet — a restart adopts the
-    * durable state.
+    * durable state. The leg runs over a streaming (doc_id, text, ts)
+    * frame.
     */
   def apply(verdictSink: BatchSink, standingDocs: => DataFrame,
-      indexDir: String, spark: org.apache.spark.sql.SparkSession,
-      minJaccard: Double = 0.5): StreamTextDedup = {
-    val store = FoldStore.open(spark, indexDir,
-      sigRows(standingDocs).withColumn("pk", pkOf), PrefixParts,
-      compactAfter = StreamMediaDedup.CompactAfter)
-    new StreamTextDedup(verdictSink, store, minJaccard)
-  }
+      indexDir: String, spark: SparkSession,
+      minJaccard: Double = 0.5): IndexLeg =
+    IndexLeg.open(spark, verdictSink, sigRows(standingDocs), indexDir,
+      IndexLeg.Spec(
+        idCol = "doc_id",
+        sign = batch => sigRows(batch.select(col("doc_id"), col("text"))),
+        toStored = toStored,
+        // best standing match per arriving doc: max jaccard, then
+        // lowest indexed id
+        judge = (index, fresh) =>
+          TextDedup.incrementalDupsFromBands(index, fresh, minJaccard)
+            .groupBy(col("new_id").as("doc_id"))
+            .agg(min(struct((-col("jaccard")).as("_nj"),
+              col("indexed_id"))).as("m"))
+            .select(col("doc_id"), col("m.indexed_id").as("matched_id"),
+              (-col("m._nj")).as("jaccard")),
+        verdicts = IndexLeg.bestMatchVerdicts("doc_id", "doc_key",
+          "has_sig", "jaccard"),
+        // minus within-batch near-dups (min-id member wins), so two
+        // near-copies arriving together cannot BOTH become canonical;
+        // lazy — the broadcast is its single evaluation
+        canonical = (fresh, best) =>
+          IndexLeg.unmatched("doc_id")(fresh, best)
+            .join(broadcast(withinBatchDups(fresh, minJaccard)),
+              Seq("doc_id"), "left_anti")))
 }

@@ -314,11 +314,11 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with TestSpark {
       "or cartesian join appears") {
     import org.apache.spark.sql.functions._
     import graft.ops.{ImageDedup, Perceptual}
-    import graft.streaming.{FoldStore, StreamMediaDedup}
+    import graft.streaming.{FoldStore, IndexLeg}
     val hashes = ImageDedup.hashRows(ImageDedup.imageTable(spark, 12))
     val stored = Perceptual.bandRows(hashes, "media_id",
         ImageDedup.ImgBands, ImageDedup.ImgBandBits)
-      .withColumn("pk", FoldStore.pk(StreamMediaDedup.PrefixParts,
+      .withColumn("pk", FoldStore.pk(IndexLeg.PrefixParts,
         col("i"), col("bv")))
     val store = FoldStore.open(spark,
       java.nio.file.Files.createTempDirectory("audit-ix").toString, stored)

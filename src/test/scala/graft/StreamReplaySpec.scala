@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-import graft.ops.{EmbedSim, ImageDedup}
+import graft.ops.{EmbedSim, ImageDedup, VideoDedup}
 import graft.streaming.{StreamEmbedDedup, StreamMediaDedup, StreamTextDedup,
   UpsertSink}
 
@@ -48,34 +48,54 @@ class StreamReplaySpec extends AnyFunSuite with Matchers with TestSpark {
   test("media leg: a replay after a committed fold re-emits identical " +
       "verdicts (kept assets must NOT flip to dup-of-self), and a " +
       "new-id re-delivery neither flips verdicts nor refolds") {
-    import spark.implicits._
     val n = 12
-    val standing = ImageDedup.hashRows(ImageDedup.imageTable(spark, n))
-    val sink = new UpsertSink("media_key")
-    val leg = StreamMediaDedup.image(sink, standing,
-      java.nio.file.Files.createTempDirectory("rp-ix").toString)
-    try {
-      // the increment has both kept (genuinely new) and dup assets
-      val batch = ImageDedup.incrementTable(spark, n)
-        .withColumn("ts", lit(t0))
-      leg.processBatch(batch, 0L)
-      val v1 = mediaVerdicts(sink)
-      val size1 = leg.indexSize
-      v1.values.map(_._1).toSet shouldBe Set(true, false) // both present
+    for (modality <- Seq("image", "video")) withClue(s"$modality: ") {
+      val sink = new UpsertSink("media_key")
+      val dir = java.nio.file.Files.createTempDirectory("rp-ix").toString
+      // video is the tier where a refold under a new id changes
+      // verdicts: twin frame rows double the shared counts and push
+      // overlap past 1
+      val (leg, increment, selfScore) = modality match {
+        case "image" => (StreamMediaDedup.image(sink,
+            ImageDedup.hashRows(ImageDedup.imageTable(spark, n)), dir),
+          ImageDedup.incrementTable(spark, n), 0.0)
+        case _ => (StreamMediaDedup.video(sink,
+            VideoDedup.hashRows(VideoDedup.videoTable(spark, n)), dir),
+          VideoDedup.incrementTable(spark, n), 1.0)
+      }
+      try {
+        // the increment has both kept (genuinely new) and dup assets
+        val batch = increment.withColumn("ts", lit(t0))
+        leg.processBatch(batch, 0L)
+        val v1 = mediaVerdicts(sink)
+        val size1 = leg.indexSize
+        v1.values.map(_._1).toSet shouldBe Set(true, false) // both present
 
-      // crash window: fold committed (lastFoldedId = 0), checkpoint
-      // commit lost -> Spark re-runs THE SAME batch id
-      leg.processBatch(batch, 0L)
-      mediaVerdicts(sink) shouldBe v1 // overwrites carried identical bits
-      leg.indexSize shouldBe size1
+        // crash window: fold committed (lastFoldedId = 0), checkpoint
+        // commit lost -> Spark re-runs THE SAME batch id
+        leg.processBatch(batch, 0L)
+        mediaVerdicts(sink) shouldBe v1 // overwrites carried identical bits
+        leg.indexSize shouldBe size1
 
-      // new-id re-delivery of the same content (at-least-once file
-      // re-appearance): same verdicts, nothing refolds
-      leg.processBatch(batch, 1L)
-      mediaVerdicts(sink) shouldBe v1
-      leg.indexSize shouldBe size1
-      leg.store.lastFoldedId shouldBe 1L // the guard advanced, rows did not
-    } finally leg.close()
+        // new-id re-delivery of the same content (at-least-once file
+        // re-appearance): same verdicts, nothing refolds
+        leg.processBatch(batch, 1L)
+        mediaVerdicts(sink) shouldBe v1
+        leg.indexSize shouldBe size1
+        leg.store.lastFoldedId shouldBe 1L // the guard advanced, rows did not
+
+        // a later copy of every kept asset matches its folded original
+        // at the self score (hamming 0 / containment 1), never past it
+        leg.processBatch(
+          batch.withColumn("media_id", col("media_id") + 1000L), 2L)
+        val v3 = mediaVerdicts(sink)
+        val kept = v1.collect { case (id, (false, _, _)) => id }
+        kept should not be empty
+        kept.foreach { id =>
+          (v3(id + 1000L)._1, v3(id + 1000L)._3) shouldBe ((true, selfScore))
+        }
+      } finally leg.close()
+    }
   }
 
   test("text leg: replay after a committed fold re-emits identical " +
