@@ -15,37 +15,6 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet)
     val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // --- cross-boot calibration probes (SCALING.md §r7 methodology) ---
-    // Boot-to-boot variance on identical code measured 20-50% (dominant
-    // co-load / CPU-steal noise), which forbade cross-boot comparisons.
-    // Two fixed probes at bench start price THIS boot: a pure-CPU probe
-    // (codegen'd xxhash64 fold over spark.range — 32-thread arithmetic,
-    // no I/O) and a pure-scan probe (column sum over a FIXED parquet
-    // input, independent of the bench SF so probe cost never scales with
-    // the sweep under measurement). Each runs twice, min taken (first
-    // run eats JIT). normalized_total = total * (ref_cpu + ref_scan) /
-    // (probe_cpu + probe_scan), with refs pinned from the boot that
-    // measured them — cross-boot comparisons quote normalized totals,
-    // same-boot comparisons keep using raw ones.
-    import org.apache.spark.sql.functions.{col, sum, xxhash64}
-    def timed(f: => Unit): Double = {
-      val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-    }
-    def probe2(f: => Unit): Double = math.min(timed(f), timed(f))
-    val probeCpuSec = probe2 {
-      // % bounds the summand so the 1.5e9-row ANSI sum cannot overflow
-      spark.range(0L, 1500000000L, 1L, 32)
-        .select(sum(xxhash64(col("id")) % 1000000L)).collect()
-    }
-    val probeScanDir = "/root/testdata/sf0.01"
-    val probeScanSec = probe2 {
-      val li = spark.read.parquet(s"$probeScanDir/lineitem.parquet")
-      li.select(sum(col("l_extendedprice") * col("l_quantity"))).collect()
-      ()
-    }
-    // pinned on the 2026-08-15 boot that introduced the probes
-    val RefCpu = 0.66
-    val RefScan = 0.29
     // cache-build cost is its own line item, not noise attributed to the
     // first query that happens to touch a shared memoized subplan
     val w0 = System.nanoTime()
@@ -160,15 +129,13 @@ object Bench {
     // a query is failed only if NO pass succeeded; a transient single-pass
     // error still lands in "errors" for visibility but keeps its median
     val nFailed = names.count(n => samples(n).isEmpty)
-    val normalizedTotal =
-      total * (RefCpu + RefScan) / (probeCpuSec + probeScanSec)
     // overridden-config runs are stamped (r13): absent under default
     // config (the driver never sets SPARK_GRAFT_CONF), so driver output
     // is unchanged; an A/B run's line is mechanically identifiable
     val confStamp = Sessions.envOverrides
       .map(s => s""","conf_env":${jstr(s.replaceAll("[\"\\\\]", " "))}""")
       .getOrElse("")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"dispersion":$disp,"passes":$nPasses,"warmup_sec":$warmupSec,"warm_pass_sec":$warmPassSec,"probe_cpu_sec":${r2(probeCpuSec)},"probe_scan_sec":${r2(probeScanSec)},"normalized_total":${r2(normalizedTotal)},"errors":$errJson,"n_failed":$nFailed$confStamp,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"dispersion":$disp,"passes":$nPasses,"warmup_sec":$warmupSec,"warm_pass_sec":$warmPassSec,"cores":${Sessions.cpus},"mem_gb":${r2(Runtime.getRuntime.maxMemory.toDouble / (1L << 30))},"errors":$errJson,"n_failed":$nFailed$confStamp,"sf":"$sfDir"}"""
     Files.writeString(Paths.get("bench_out.json"), line)
     // pin the FULL per-query map per run: BENCH_r0N.json keeps only a
     // truncated tail, so round-over-round per-query regressions were

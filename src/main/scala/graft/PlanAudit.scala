@@ -13,10 +13,12 @@ package graft
   *  - `cartesian`: CartesianProduct count — must be ZERO everywhere;
   *  - `pushed`: whether any parquet scan carries PushedFilters.
   *
-  * Usage: runMain graft.PlanAudit [sfDir]. PlanAuditSpec pins these counts
-  * so a shuffle regression (e.g. a lost broadcast hint or a window that
-  * re-partitions) fails CI instead of surfacing as a 100x slowdown at
-  * scale.
+  * Usage: runMain graft.PlanAudit [sfDir] [query...]. PlanAuditSpec pins
+  * these counts so a shuffle regression (e.g. a lost broadcast hint or a
+  * window that re-partitions) fails CI instead of surfacing as a 100x
+  * slowdown at scale. Each named query's formatted physical plan is
+  * printed after the table, for plan review (pushdown, broadcast,
+  * shuffle placement).
   */
 object PlanAudit {
 
@@ -36,6 +38,10 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val explain = args.drop(1)
+    val unknown = explain.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty,
+      s"not in SparkEntry.queries: ${unknown.mkString(", ")}")
     val spark = Sessions.builder("8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     println(f"${"query"}%-22s shuffles bcast bnlj cartesian pushed")
@@ -43,6 +49,10 @@ object PlanAudit {
       val a = audit(fn(spark, dir))
       println(f"$name%-22s ${a.shuffles}%8d ${a.bcast}%5d ${a.bnlj}%4d " +
         f"${a.cartesian}%9d ${a.pushed}%6b")
+    }
+    explain.foreach { name =>
+      println(s"\n========== $name ==========")
+      SparkEntry.queries(name)(spark, dir).explain("formatted")
     }
     Queries.clear()
     spark.stop()

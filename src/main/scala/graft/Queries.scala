@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.ops._
 import graft.oracle.{Sql, SqlText}
@@ -16,13 +17,17 @@ object Queries {
     * (the annotated clean pipeline feeds 7 queries; MinHash signatures feed
     * 2). Verify/Bench run every query in one session, so persisting these
     * avoids recomputing the regex-heavy pipelines per query. Keyed by
-    * (session, dir); storage tier per [[Tier]] — deserialized by
-    * default (the r7 same-condition A/B measured a 10-25% per-read
-    * deserialization tax across memo consumers under the serialized
-    * tier at sf1, while the sf3+ pass contamination the serialized
-    * tier targeted is cured by the bench's inter-pass reclaim of DEAD
-    * blocks), `spark.graft.storage.tier=ser` for deployments whose
-    * live pinned set approaches the storage pool.
+    * (session, dir), stored deserialized (MEMORY_AND_DISK). The r7 sf1 A/B
+    * priced the serialized tier under one condition: it shrinks the
+    * resident set 2-4× but charges a deserialization per read, and
+    * re-read-heavy consumers pay it many times over — a 10-25% tax across
+    * memo consumers, q_substring_dedup_bpe 23.2 → 58.8 s and
+    * q_ccnet_buckets 17.3 → 27.3 s on their checkpoints. The sf3+ pool
+    * pressure it was introduced for (q_ccnet_buckets 51.7 → 120 s across
+    * passes) was dead blocks lingering between passes, cured by the
+    * bench's inter-pass reclaim, not the live set's size. Where the live
+    * pinned set does approach the storage pool, size executor storage to
+    * it.
     */
   private val memo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String),
@@ -30,7 +35,7 @@ object Queries {
   private def memoize(spark: SparkSession, dir: String, what: String)
                      (build: => DataFrame): DataFrame =
     memo.computeIfAbsent((spark, dir, what), { _ =>
-      val df = build.persist(Tier.level(spark))
+      val df = build.persist(StorageLevel.MEMORY_AND_DISK)
       // materialize eagerly: the first consumer query otherwise fans out
       // into several concurrent scans that race to compute the uncached
       // plan (measured 114 s vs 12 s for the MinHash family at sf0.1)

@@ -49,7 +49,7 @@ object Ranked {
     val ranged = df
       .repartitionByRange(n, (col(key) +: order): _*)
       .withColumn("_pid", spark_partition_id())
-      // storage tier per graft.Tier: deserialized by default — both
+      // deserialized storage (MEMORY_AND_DISK, the default) — both
       // rank branches re-read this checkpoint and the serialized
       // tier's per-read deserialization measured q_ccnet_buckets
       // 17.3 → 27.3 s at sf1 (r7 same-condition A/B); see SCALING.md.
@@ -59,7 +59,7 @@ object Ranked {
       // priceStats vHist case — the two rank branches race to
       // materialize a lazy checkpoint under AQE's concurrent stage
       // submission, while eager materializes once up front
-      .localCheckpoint(true, graft.Tier.level(df.sparkSession))
+      .localCheckpoint(true)
     val wLocal = Window.partitionBy(col("_pid"), col(key))
       .orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, -1)

@@ -255,8 +255,8 @@ object Relational {
       // 0.54/0.58) measured lazy med 2.77 / min 2.45 vs eager med 3.40 /
       // min 3.30, no checkpoint at all ~3.7-5.0 (ReusedExchange does not
       // unify the three consumers); lazy also keeps plan-only consumers
-      // (PlanAudit, Explain) from running jobs at construction
-      .localCheckpoint(false, graft.Tier.level(spark))
+      // (PlanAudit) from running jobs at construction
+      .localCheckpoint(false)
 
     // per-(flag, kind) min/max/n FROM the histogram: min/max are
     // multiplicity-blind and n = Σ cnt — identical values to the r12

@@ -340,7 +340,7 @@ object TextAnalysis {
       // the salted stream join both hang off the token explode, so the
       // tokenize pass ran twice per execution (plan: 3 parquet scans).
       // Lazy — the first action materializes it. Guide §2.4.
-      .localCheckpoint(false, graft.Tier.level(docs.sparkSession))
+      .localCheckpoint(false)
     val freq = toks.groupBy("tok").agg(count(lit(1)).as("_f"))
     val scored = Salted.join(toks, freq, Seq("tok"), "doc_id", salts)
       .groupBy("doc_id")
@@ -440,12 +440,12 @@ object TextAnalysis {
     // build). tf is (doc, word)-distinct — corpus-compressed — so the
     // checkpoint is far cheaper than the repeated pass it removes.
     // lazy (r13, advisor note): eager ran the tokenize+tf job at
-    // DataFrame CONSTRUCTION time, so plan-only consumers (PlanAudit,
-    // Explain) executed a full cluster job just to build the plan; the
+    // DataFrame CONSTRUCTION time, so plan-only consumers (PlanAudit)
+    // executed a full cluster job just to build the plan; the
     // first real action materializes the checkpoint all the same
     val tf = toks.groupBy("doc_id", "word")
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false, graft.Tier.level(docs.sparkSession))
+      .localCheckpoint(false)
     val dfreq = tf.groupBy("word").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("_n"))
     val scored = tf.join(dfreq, "word")
@@ -547,7 +547,7 @@ object TextAnalysis {
     val bgCount0 = bigrams.groupBy("h1", "hb").agg(count(lit(1)).as("_cb"))
     val bgCount =
       if (ckptCounts)
-        bgCount0.localCheckpoint(false, graft.Tier.level(docs.sparkSession))
+        bgCount0.localCheckpoint(false)
       else bgCount0
     val prefCount = bgCount.groupBy("h1").agg(sum(col("_cb")).as("_cp"))
     val scored = Salted.join(

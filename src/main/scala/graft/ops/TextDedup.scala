@@ -192,7 +192,7 @@ object TextDedup {
     // substring family's gram checkpoint
     containmentPairsOf(
       signatures(corpus).select("doc_id", "shingles", "mh", "bands")
-        .localCheckpoint(true, graft.Tier.level(corpus.sparkSession)))
+        .localCheckpoint(true))
 
   /** Asymmetric shingle containment |A∩B| / |A| (both directions) for the
     * LSH candidates, kept when either direction >= [[ContainMin]] —
@@ -1282,7 +1282,7 @@ object TextDedup {
       // and the kept-join stream both hang off the chunk build, so the
       // words+slice+concat chunking pass ran twice per execution. Lazy
       // per the priceStats A/B.
-      .localCheckpoint(false, graft.Tier.level(corpus.sparkSession))
+      .localCheckpoint(false)
     // only DUPLICATED chunks need a keeper row (a unique chunk's sole
     // occurrence IS its first occurrence): filtering the join's build
     // side to them keeps it churn-sized — AQE broadcasts it and the
@@ -1350,12 +1350,12 @@ object TextDedup {
       // without it each self-join branch re-runs the window hashing,
       // the expensive part of the pass (measured: attribute dedup
       // re-aliases the branches and exchange reuse does not unify them).
-      // Storage tier per graft.Tier: deserialized by default — this
+      // Deserialized storage (MEMORY_AND_DISK, the default) — this
       // checkpoint is read by BOTH join branches, and the serialized
       // tier's per-read deserialization measured 23.2 → 58.8 s on
       // q_substring_dedup_bpe at sf1 (r7 same-condition A/B).
       substrGramPos(substrWordRows(corpus), k)
-        .localCheckpoint(true, graft.Tier.level(corpus.sparkSession)), k)
+        .localCheckpoint(true), k)
 
   /** The word-split doc stream shared by the substring-dedup family:
     * (doc_id, text, _words). The registry memoizes ONE such frame per
@@ -1496,7 +1496,7 @@ object TextDedup {
       // covered-rebuild join and the final projection each re-derived
       // the increment (a documents scan + filter + rebuild per branch).
       // Lazy per the priceStats A/B; increment-sized either way.
-      .localCheckpoint(false, graft.Tier.level(increment.sparkSession))
+      .localCheckpoint(false)
     val grams = base
       .filter(col("n_words") >= k)
       .select(col("doc_id"),
@@ -1505,7 +1505,7 @@ object TextDedup {
       // one materialization, two consumers (keeper agg + the covered
       // join) — same rationale as substringDedup, with the ordering
       // struct derived post-checkpoint
-      .localCheckpoint(true, graft.Tier.level(increment.sparkSession))
+      .localCheckpoint(true)
       .withColumn("_ord", firstOcc(col("p")))
     val bKeeper = grams.groupBy(col("gh"))
       .agg(min(col("_ord")).as("_keeper"), count(lit(1)).as("_n"))
@@ -1616,7 +1616,7 @@ object TextDedup {
       // (size(BpeSymbols) — the equivalence the final projection already
       // relied on, pinned in its spec). Lazy per the priceStats A/B;
       // the eager gram checkpoint materializes it at construction.
-      .localCheckpoint(false, graft.Tier.level(withWords.sparkSession))
+      .localCheckpoint(false)
     val symsOf = transform(col("_syms"), s => s("sym"))
     val grams = base
       .filter(col("n_tokens") >= k)
@@ -1626,7 +1626,7 @@ object TextDedup {
       // single materialization of the BPE window hashing (see
       // substringDedup — the same checkpoint pin, same tier policy,
       // ordering struct derived post-checkpoint)
-      .localCheckpoint(true, graft.Tier.level(withWords.sparkSession))
+      .localCheckpoint(true)
       .withColumn("_ord", firstOcc(col("p")))
     // duplicated grams only on the build side; affected docs only in the
     // reassembly — see [[substringDedup]] (same two restructures)

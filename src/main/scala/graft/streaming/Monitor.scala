@@ -68,6 +68,5 @@ object Monitor {
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
       "true",
     "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true",
-    "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB" ->
-      sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_MB", "4096"))
+    "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB" -> "4096")
 }
