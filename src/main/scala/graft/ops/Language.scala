@@ -61,8 +61,6 @@ object Language {
     when(TextFeatures.emptyText(t), lit(0)).otherwise(raw)
   }
 
-  def enMatches(t: Column): Column = matchesFor("en", t)
-
   /** The regex for one profile (the exact pattern [[matchesFor]] runs). */
   def regexFor(lang: String): String = lang match {
     case "en" => EnStopwords
@@ -117,12 +115,11 @@ object Language {
     least(lit(1.0),
       round(detectedMatches(en, others) * lit(ConfPerMatch), 2))
 
-  /** Single-expression forms (recompute the counts; the clean pipeline
-    * stages the counts as columns instead and uses the *From variants).
+  /** Single-expression form (recomputes the counts with one regex pass per
+    * profile; the clean pipeline stages the fused counts as columns
+    * instead and uses the *From variants) — the reference the specs check
+    * the fused path against.
     */
   def language(t: Column): Column =
     languageFrom(matchesFor("en", t), OtherLangs.map(matchesFor(_, t)))
-
-  def confidence(t: Column): Column =
-    confidenceFrom(matchesFor("en", t), OtherLangs.map(matchesFor(_, t)))
 }

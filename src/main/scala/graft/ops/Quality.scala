@@ -26,13 +26,9 @@ object Quality {
 
   /** Q2 validity (quality_engine.py:60-86): mean of a text-length score and
     * a rating score, both computed on the RAW (pre-truncation) values.
-    * Text falsy -> 0.0; rating falsy (None or 0) -> 0.0.
-    */
-  def validity(text: Column, rating: Column): Column =
-    validityFrom(TextFeatures.emptyText(text), length(text), rating)
-
-  /** validity from precomputed (textMissing, rawLen) — lets callers share the
-    * length/emptiness columns instead of re-embedding the text scans.
+    * Text falsy -> 0.0; rating falsy (None or 0) -> 0.0. Takes precomputed
+    * (textMissing, rawLen) so callers share the length/emptiness columns
+    * instead of re-embedding the text scans.
     */
   def validityFrom(textMissing: Column, len: Column, rating: Column): Column = {
     val textScore = when(textMissing, lit(0.0))

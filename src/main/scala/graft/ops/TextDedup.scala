@@ -627,64 +627,8 @@ object TextDedup {
       .orderBy("doc_id")
   }
 
-  /** Connected-component dedup clusters: near-dup PAIRS are only half a
-    * dedup pipeline — keeping one representative per duplicate CLUSTER
-    * needs the transitive closure (a~b, b~c => {a,b,c} share one
-    * canonical), which pairwise joins cannot express.
-    *
-    * Spark-first iterative min-label propagation (the Pregel pattern):
-    * every node starts labeled with its own doc_id; each round a node
-    * takes the min of its label and its neighbors' labels; fixpoint =
-    * connected components, labeled by their minimum doc_id. Rounds needed
-    * = component diameter — near-dup clusters are shallow (near-cliques
-    * from LSH banding), so convergence is fast; for adversarially long
-    * chains at 100 TB the alternating large-star/small-star variant
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond")
-    * converges in O(log n) rounds with the same per-round shape.
-    *
-    * Scale shape per round: one shuffle join (edges x labels on dst), one
-    * partial-aggregated groupBy(src) min, one join back to labels — all
-    * key-partitioned, nothing collected to the driver. Convergence is
-    * detected from sum(label), which strictly decreases until fixpoint
-    * (labels only ever decrease), so the per-round action is a cheap
-    * aggregate, not a full-frame compare. Each round's labels are
-    * persisted and the previous round unpersisted, and every
-    * [[ClusterCheckpointEvery]] rounds the labels are localCheckpoint'ed:
-    * without lineage truncation each round's plan embeds every previous
-    * round, so planning cost COMPOUNDS on long-diameter graphs (measured:
-    * a ~15-round random chain went from seconds to minutes per round).
-    *
-    * Output: (doc_id, cluster_rep, cluster_size, is_canonical) for EVERY
-    * corpus doc (non-paired docs are their own singleton cluster).
-    */
-  val ClusterCheckpointEvery = 5
-
-  /** The last converged labels handle (persisted or localCheckpoint'ed).
-    * The returned clusters frame references it lazily, so it cannot be
-    * unpersisted inside [[dedupClusters]]; instead each new run releases the
-    * previous run's handle, and [[clearClusterState]] (called from
-    * `Queries.clear()`) releases the final one — without this, repeated
-    * invocations in a long-lived JVM (Bench warm+timed, test suites)
-    * accumulate cached label RDDs unboundedly.
-    */
-  private var lastLabels: Option[DataFrame] = None
-
-  def clearClusterState(): Unit = synchronized {
-    lastLabels.foreach { df =>
-      try df.unpersist(blocking = false) catch { case _: Throwable => () }
-    }
-    lastLabels = None
-  }
-
-  private def trackLabels(labels: DataFrame): Unit = synchronized {
-    lastLabels.foreach { df =>
-      try df.unpersist(blocking = false) catch { case _: Throwable => () }
-    }
-    lastLabels = Some(labels)
-  }
-
   /** Edge-count ceiling for the driver-local union-find tier of
-    * [[dedupClusters]] / [[dedupClustersStar]] (r12 optimization round).
+    * [[dedupClusters]] (r12 optimization round).
     * The verified near-dup pair set is CHURN-sized, not corpus-sized —
     * LSH-capped candidates that survive an exact-jaccard verify — so at
     * bench scale it is a few thousand rows and even the sf10 sweep stays
@@ -694,8 +638,8 @@ object TextDedup {
     * (16 MB at the cap — well under the 1 GB driver default) + union-find
     * + one broadcast join back is the honest plan, exactly the tiered
     * decision the engine already makes for broadcast-sized benchmarks
-    * (StreamGate) and increments. Above the cap the distributed loops
-    * run unchanged — the 100 TB shape is untouched.
+    * (StreamGate) and increments. Above the cap the distributed star
+    * loop runs unchanged — the 100 TB shape is untouched.
     *
     * Conf `spark.graft.cc.localMaxEdges` overrides (0 disables — specs
     * pin the distributed tier's round semantics that way).
@@ -756,143 +700,13 @@ object TextDedup {
       .orderBy("doc_id")
   }
 
-  /** Iterate ONLY over the paired subgraph: near-dup pairs cover a tiny
-    * fraction of a real corpus (worst case ~a few % at 100 TB), and a doc
-    * with no edge can never change its label — carrying the corpus-sized
-    * label frame through every round (the previous shape) multiplied each
-    * round's two joins by |corpus| / |paired docs|. Singletons attach in
-    * ONE final left join after convergence.
-    *
-    * Tiered (r12): pair sets at or under [[LocalEdgeMax]] take the
-    * driver union-find (exact — the fixpoint the loop converges to);
-    * `maxRounds` binds only the distributed tier, whose cap can return a
-    * consistent partial labeling.
-    */
-  def dedupClusters(corpus: DataFrame, pairs: DataFrame,
-      maxRounds: Int = 50): DataFrame = {
-    val p = pairs.select(col("doc_a"), col("doc_b")).persist()
-    val nPairs = p.count()
-    // cap > 0: "cap 0 disables the local tier" must hold for EMPTY pair
-    // sets too (r13, advisor note) — specs pinning distributed-loop
-    // semantics with withLocalCap(0) would otherwise silently exercise
-    // the local tier on empty inputs
-    val cap = localEdgeCap(corpus.sparkSession)
-    if (cap > 0 && nPairs <= cap) {
-      val collected = p.collect().map(r => (r.getLong(0), r.getLong(1)))
-      p.unpersist(blocking = false)
-      return smallGraphClusters(corpus, collected)
-    }
-    val edges = p
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionAll(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist()
-    def sumOf(df: DataFrame): Long = {
-      val r = df.agg(sum(col("rep"))).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    // fused init: propagating over identity labels is just min-of-
-    // neighbors, so labels START one round in — the same single shuffle
-    // that a node-set distinct would cost buys the first round for free
-    var labels = edges.groupBy(col("src"))
-      .agg(min(col("dst")).as("_m"))
-      .select(col("src").as("doc_id"),
-        least(col("src"), col("_m")).as("rep"))
-      .persist()
-    var labelSum = sumOf(labels)
-    // labels + edges are materialized in cache now; the pair parent can go
-    p.unpersist(blocking = false)
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      val prop = edges
-        .join(labels.select(col("doc_id").as("dst"), col("rep")), "dst")
-        .groupBy(col("src"))
-        .agg(min(col("rep")).as("_nrep"))
-      val next0 = labels
-        .join(prop.select(col("src").as("doc_id"), col("_nrep")),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("rep"), coalesce(col("_nrep"), col("rep"))).as("rep"))
-      // truncate lineage periodically: each round otherwise re-plans every
-      // previous round's joins, compounding on long-diameter graphs
-      val next =
-        if ((round + 1) % ClusterCheckpointEvery == 0)
-          next0.localCheckpoint(true)
-        else next0.persist()
-      val nextSum = sumOf(next)
-      converged = nextSum == labelSum
-      labels.unpersist(blocking = false)
-      labels = next
-      labelSum = nextSum
-      round += 1
-    }
-    edges.unpersist(blocking = false)
-    trackLabels(labels)
-    // singletons (the corpus majority) never entered the loop: one left
-    // join attaches them as their own cluster representative
-    val full = corpus.select(col("doc_id"))
-      .join(labels.select(col("doc_id"), col("rep")), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep"))
-    withClusterCols(full)
-  }
-
-  /** Finalize a (doc_id, rep) label frame to the cluster output contract.
-    *
-    * cluster_size comes from groupBy(rep).count() + a join back, NOT a
-    * window over rep: `count().over(Window.partitionBy(rep))` has no
-    * partial aggregation, so the classic mega-cluster (1M+ boilerplate
-    * docs under one rep at 100 TB) lands entirely in one task's sort
-    * buffer. The groupBy is map-side combined (one row per rep reaches
-    * the shuffle) and the per-rep size frame is tiny, so AQE broadcasts
-    * it back — same shuffle count, no unbounded per-key task.
-    */
-  private def withClusterCols(labels: DataFrame): DataFrame = {
-    val sizes = labels.groupBy(col("rep"))
-      .agg(count(lit(1)).cast("long").as("cluster_size"))
-    labels.join(sizes, "rep")
-      .select(col("doc_id"), col("rep").as("cluster_rep"),
-        col("cluster_size"),
-        (col("doc_id") === col("rep")).as("is_canonical"))
-      .orderBy("doc_id")
-  }
-
-  /** Quality-aware canonical selection over dedup clusters: per cluster
-    * keep the HIGHEST-quality member (tiebreak: smallest doc_id), not the
-    * min-id representative — the policy real dedup pipelines run, where
-    * near-dup variants differ in truncation/boilerplate and the kept copy
-    * should be the best one, not an arbitrary one.
-    *
-    * Scale shape: one key join (clusters x quality on doc_id) into a
-    * partially-aggregated groupBy(cluster_rep) whose argmax is a
-    * `max(struct(quality, -doc_id))` — struct ordering is lexicographic,
-    * so the combiner keeps one candidate row per rep per partition and a
-    * mega-cluster ships ONE row per partition through the exchange (the
-    * same no-window-straggler rule as [[withClusterCols]]).
-    *
-    * @param clusters (doc_id, cluster_rep, ...) from [[dedupClusters]] or
-    *                 [[dedupClustersStar]]
-    * @param quality  (doc_id, quality) — any deterministic per-doc score;
-    *                 the registry uses [[TextAnalysis.docQuality]]
-    */
-  def keepBest(clusters: DataFrame, quality: DataFrame): DataFrame =
-    clusters
-      .join(quality.select(col("doc_id"), col("quality")), "doc_id")
-      .groupBy("cluster_rep")
-      .agg(count(lit(1)).cast("long").as("cluster_size"),
-        max(struct(col("quality"), (-col("doc_id")).as("_nid"))).as("_b"))
-      .select(col("cluster_rep"),
-        (-col("_b._nid")).as("best_doc"),
-        col("_b.quality").as("best_quality"),
-        col("cluster_size"))
-      .orderBy("cluster_rep")
-
-  /** Rounds the last [[dedupClustersStar]] run took to converge — spec
-    * introspection only (DedupClustersSpec pins the O(log n) round bound
-    * on a long-chain fixture).
+  /** Rounds the last [[dedupClusters]] run took to converge (0 on the
+    * union-find tier) — spec introspection only (DedupClustersSpec pins
+    * the O(log n) round bound on a long-chain fixture).
     */
   @volatile var lastStarRounds: Int = 0
 
-  /** Whether the last [[dedupClustersStar]] run reached the edge-set
+  /** Whether the last [[dedupClusters]] run reached the edge-set
     * fixpoint. lastStarRounds alone cannot distinguish "converged on the
     * last allowed round" from "round cap exhausted mid-iteration" — and a
     * capped-out run silently returns UNDER-clustered labels (each node gets
@@ -900,14 +714,20 @@ object TextDedup {
     */
   @volatile var lastStarConverged: Boolean = true
 
-
-  /** Connected components via alternating large-star/small-star (Kiveris
-    * et al., "Connected Components in MapReduce and Beyond") — the
-    * adversarial-diameter upgrade over [[dedupClusters]]: plain min-label
-    * propagation needs rounds = component DIAMETER (a 1M-doc boilerplate
-    * chain at 100 TB = 1M rounds), while star contraction converges in
-    * O(log n) rounds on any graph because each round rewires whole
-    * neighborhoods to their minimum, halving effective diameter.
+  /** Connected-component dedup clusters: near-dup PAIRS are only half a
+    * dedup pipeline — keeping one representative per duplicate CLUSTER
+    * needs the transitive closure (a~b, b~c => {a,b,c} share one
+    * canonical), which pairwise joins cannot express.
+    *
+    * Tiered (r12): pair sets at or under [[LocalEdgeMax]] take the driver
+    * union-find (exact, 0 rounds). Above the cap, connected components via
+    * alternating large-star/small-star (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond"): plain min-label propagation
+    * needs rounds = component DIAMETER (a 1M-doc boilerplate chain at
+    * 100 TB = 1M rounds), while star contraction converges in O(log n)
+    * rounds on any graph because each round rewires whole neighborhoods
+    * to their minimum, halving effective diameter. `maxRounds` binds only
+    * this tier; a capped-out run is flagged in [[lastStarConverged]].
     *
     * Edges are kept canonically directed big→small (u > v). Per round:
     *  - LARGE-STAR: for every node u (both directions), attach each
@@ -919,23 +739,38 @@ object TextDedup {
     * Nothing is ever collected to the driver; convergence is detected from
     * a (count, xor of xxhash64(u,v)) edge-set signature — a fixpoint of
     * both stars means every edge already points at its component minimum.
+    * Only the paired subgraph iterates: singletons attach in ONE final
+    * left join.
     *
-    * Lineage is localCheckpoint'ed EVERY round, not every-N like
-    * [[dedupClusters]]: a star round references the previous round's frame
-    * ~12× (both stars union/join their own input), so the analyzed plan
-    * grows ~12^N between truncations — at every-4 that is a ~20,000×
-    * planning blow-up that pegs the driver single-threaded (measured: the
-    * 32-node chain spec spun for 10+ minutes planning). The eager
-    * checkpoint is free here because the signature aggregate materializes
-    * every round regardless.
+    * Lineage is localCheckpoint'ed EVERY round: a star round references
+    * the previous round's frame ~12× (both stars union/join their own
+    * input), so the analyzed plan grows ~12^N between truncations — at
+    * every-4 that is a ~20,000× planning blow-up that pegs the driver
+    * single-threaded (measured: the 32-node chain spec spun for 10+
+    * minutes planning). The eager checkpoint is free here because the
+    * signature aggregate materializes every round regardless.
     *
-    * Output contract is identical to [[dedupClusters]] (same oracle):
-    * (doc_id, cluster_rep, cluster_size, is_canonical) for every corpus
-    * doc.
+    * Output: (doc_id, cluster_rep, cluster_size, is_canonical) for EVERY
+    * corpus doc (non-paired docs are their own singleton cluster), labeled
+    * by the component minimum on both tiers.
     */
-  def dedupClustersStar(corpus: DataFrame, pairs: DataFrame,
+  def dedupClusters(corpus: DataFrame, pairs: DataFrame,
       maxRounds: Int = 30): DataFrame = {
-    var edges = pairs
+    val p = pairs.select(col("doc_a"), col("doc_b")).persist()
+    val nPairs = p.count()
+    // cap > 0: "cap 0 disables the local tier" must hold for EMPTY pair
+    // sets too (r13, advisor note) — specs pinning distributed-loop
+    // semantics with withLocalCap(0) would otherwise silently exercise
+    // the local tier on empty inputs
+    val cap = localEdgeCap(corpus.sparkSession)
+    if (cap > 0 && nPairs <= cap) {
+      val collected = p.collect().map(r => (r.getLong(0), r.getLong(1)))
+      p.unpersist(blocking = false)
+      lastStarRounds = 0
+      lastStarConverged = true
+      return smallGraphClusters(corpus, collected)
+    }
+    var edges = p
       .select(greatest(col("doc_a"), col("doc_b")).as("u"),
         least(col("doc_a"), col("doc_b")).as("v"))
       .filter(col("u") =!= col("v"))
@@ -976,20 +811,8 @@ object TextDedup {
     }
 
     var sig = signature(edges)
-    // tiered like [[dedupClusters]]: a bounded canonical edge set takes
-    // the driver union-find (exact), the star loop stays the
-    // adversarial-diameter scale path. Exact ⇒ report converged, 0 rounds.
-    // cap > 0 (r13): see dedupClusters — honor "cap 0 disables" on
-    // empty edge sets
-    val cap = localEdgeCap(corpus.sparkSession)
-    if (cap > 0 && sig._1 <= cap) {
-      val collected = edges.select(col("u"), col("v")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      edges.unpersist(blocking = false)
-      lastStarRounds = 0
-      lastStarConverged = true
-      return smallGraphClusters(corpus, collected)
-    }
+    // the canonical edges are materialized in cache now; the pairs can go
+    p.unpersist(blocking = false)
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
@@ -999,7 +822,7 @@ object TextDedup {
       val next = smallStar(largeStar(edges)).localCheckpoint(false)
       val nextSig = signature(next)
       converged = nextSig == sig
-      edges.unpersist(blocking = false)
+      release(edges)
       edges = next
       sig = nextSig
       round += 1
@@ -1011,24 +834,85 @@ object TextDedup {
     // as exact would be an invisible correctness degradation at scale
     if (!converged)
       System.err.println(
-        s"WARN dedupClustersStar: round cap ($maxRounds) exhausted before " +
+        s"WARN dedupClusters: round cap ($maxRounds) exhausted before " +
           "edge-set fixpoint — labels are UNDER-clustered (per-node star " +
           "minimum, not component minimum); raise maxRounds")
     // fixpoint edges are star edges (node → component min); the groupBy min
-    // is a cheap guard making the label unique per node by construction
+    // is a cheap guard making the label unique per node by construction.
+    // EAGER checkpoint before releasing the edges: the final round's edges
+    // are a localCheckpoint (truncated lineage), so labels left lazy over
+    // them would be unrecomputable once their blocks are dropped
     val labels = corpus.select(col("doc_id"))
       .join(edges.groupBy(col("u").as("doc_id")).agg(min(col("v")).as("_rep")),
         Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("_rep"), col("doc_id")).as("rep"))
-      .persist()
-    // materialize BEFORE releasing edges: the final round's edges may be a
-    // localCheckpoint (truncated lineage — unpersisting it first would make
-    // the lazily-referencing labels unrecomputable)
-    labels.count()
-    edges.unpersist(blocking = false)
-    trackLabels(labels)
+      .localCheckpoint(true)
+    release(edges)
     withClusterCols(labels)
   }
+
+  /** Drop a round's edge blocks now, not at the next GC. `unpersist` only
+    * reaches frames the CacheManager holds (the first round's `persist`);
+    * a localCheckpoint frame is a LogicalRDD it never sees, so its blocks
+    * are freed through the RDD itself.
+    */
+  private def release(df: DataFrame): Unit = {
+    df.unpersist(blocking = false)
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+  }
+
+  /** Finalize a (doc_id, rep) label frame to the cluster output contract.
+    *
+    * cluster_size comes from groupBy(rep).count() + a join back, NOT a
+    * window over rep: `count().over(Window.partitionBy(rep))` has no
+    * partial aggregation, so the classic mega-cluster (1M+ boilerplate
+    * docs under one rep at 100 TB) lands entirely in one task's sort
+    * buffer. The groupBy is map-side combined (one row per rep reaches
+    * the shuffle) and the per-rep size frame is tiny, so AQE broadcasts
+    * it back — same shuffle count, no unbounded per-key task.
+    */
+  private def withClusterCols(labels: DataFrame): DataFrame = {
+    val sizes = labels.groupBy(col("rep"))
+      .agg(count(lit(1)).cast("long").as("cluster_size"))
+    labels.join(sizes, "rep")
+      .select(col("doc_id"), col("rep").as("cluster_rep"),
+        col("cluster_size"),
+        (col("doc_id") === col("rep")).as("is_canonical"))
+      .orderBy("doc_id")
+  }
+
+  /** Quality-aware canonical selection over dedup clusters: per cluster
+    * keep the HIGHEST-quality member (tiebreak: smallest doc_id), not the
+    * min-id representative — the policy real dedup pipelines run, where
+    * near-dup variants differ in truncation/boilerplate and the kept copy
+    * should be the best one, not an arbitrary one.
+    *
+    * Scale shape: one key join (clusters x quality on doc_id) into a
+    * partially-aggregated groupBy(cluster_rep) whose argmax is a
+    * `max(struct(quality, -doc_id))` — struct ordering is lexicographic,
+    * so the combiner keeps one candidate row per rep per partition and a
+    * mega-cluster ships ONE row per partition through the exchange (the
+    * same no-window-straggler rule as [[withClusterCols]]).
+    *
+    * @param clusters (doc_id, cluster_rep, ...) from [[dedupClusters]]
+    * @param quality  (doc_id, quality) — any deterministic per-doc score;
+    *                 the registry uses [[TextAnalysis.docQuality]]
+    */
+  def keepBest(clusters: DataFrame, quality: DataFrame): DataFrame =
+    clusters
+      .join(quality.select(col("doc_id"), col("quality")), "doc_id")
+      .groupBy("cluster_rep")
+      .agg(count(lit(1)).cast("long").as("cluster_size"),
+        max(struct(col("quality"), (-col("doc_id")).as("_nid"))).as("_b"))
+      .select(col("cluster_rep"),
+        (-col("_b._nid")).as("best_doc"),
+        col("_b.quality").as("best_quality"),
+        col("cluster_size"))
+      .orderBy("cluster_rep")
 
   val SimhashBits = 56
 

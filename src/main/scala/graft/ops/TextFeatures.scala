@@ -3,64 +3,14 @@ package graft.ops
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.rules.Rules._
-
-/** Text featurization as pure column expressions (whole-stage-codegen
-  * friendly; no UDFs). Semantics: `streaming/quality_engine.py:177-221`
-  * (calculate_text_features) of the reference.
+/** Text-feature helpers shared by the quality pipeline. The features
+  * themselves (`streaming/quality_engine.py:177-221`, calculate_text_features)
+  * come from the fused [[graft.functions.TextStats]] scan in
+  * [[Clean.annotate]].
   *
   * Null/empty text yields all-zero features (quality_engine.py:178-187).
   */
 object TextFeatures {
 
   def emptyText(t: Column): Column = t.isNull || length(t) === 0
-
-  /** Count of occurrences of single-char regex class `cls` in `t`. */
-  def charClassCount(t: Column, cls: String): Column =
-    length(t) - length(regexp_replace(t, cls, ""))
-
-  /** Python `str.split()`: split on whitespace runs, drop empty tokens. */
-  def wordsCol(t: Column): Column =
-    filter(split(t, """\s+"""), w => w =!= "")
-
-  def wordCount(t: Column): Column =
-    when(emptyText(t), lit(0)).otherwise(size(wordsCol(t)))
-
-  def charCount(t: Column): Column =
-    when(emptyText(t), lit(0)).otherwise(length(t))
-
-  /** max(1, #('.') + #('!') + #('?')) — quality_engine.py:193 */
-  def sentenceCount(t: Column): Column =
-    when(emptyText(t), lit(0))
-      .otherwise(greatest(lit(1), charClassCount(t, SentenceClass)))
-
-  /** Mean token length after stripping `.,!?;:` from token ends, 2dp —
-    * quality_engine.py:195-199,217.
-    */
-  def avgWordLength(t: Column): Column = {
-    val words = wordsCol(t)
-    val total = aggregate(words, lit(0),
-      (acc, w) => acc + length(regexp_replace(w, WordStripClass, "")))
-    when(emptyText(t) || size(words) === 0, lit(0.0))
-      .otherwise(round(total / size(words), 2))
-  }
-
-  /** Uppercase chars over non-space chars (Python `text.replace(' ','')` —
-    * only the space char is removed), 2dp — quality_engine.py:201-205,218.
-    */
-  def capsRatio(t: Column): Column = {
-    val nonSpace = length(regexp_replace(t, " ", ""))
-    when(emptyText(t) || nonSpace === 0, lit(0.0))
-      .otherwise(round(charClassCount(t, UpperClass) / nonSpace, 2))
-  }
-
-  /** Chars in `.,!?;:'"()-` over char_count, 2dp — quality_engine.py:207-208. */
-  def punctRatio(t: Column): Column =
-    when(emptyText(t), lit(0.0))
-      .otherwise(round(charClassCount(t, PunctFeatureClass) / length(t), 2))
-
-  /** Digits over char_count, 2dp — quality_engine.py:210-211,220. */
-  def digitRatio(t: Column): Column =
-    when(emptyText(t), lit(0.0))
-      .otherwise(round(charClassCount(t, DigitClass) / length(t), 2))
 }

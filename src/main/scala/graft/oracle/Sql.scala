@@ -42,9 +42,7 @@ object Sql {
   def qsumR(x: String, scale: Double, dp: Int): String =
     s"CAST(round(CAST(${qsum(x, scale)} AS DECIMAL(38, 12)), $dp) AS DOUBLE)"
 
-  /** Occurrences of single-char regex class `cls`. Mirrors
-    * TextFeatures.charClassCount.
-    */
+  /** Occurrences of single-char regex class `cls`. */
   def classCount(e: String, cls: String): String =
     s"(length($e) - length(regexp_replace($e, ${s(cls)}, '', 'g')))"
 

@@ -66,10 +66,8 @@ object Rules {
   // testdata is ASCII; divergence on non-ASCII is documented in SURVEY §7.
   val SentenceClass = """[.!?]""" // quality_engine.py:193
   val WordStripClass = """^[.,!?;:]+|[.,!?;:]+$""" // .strip('.,!?;:') per token
-  val UpperClass = """[A-Z]""" // caps_ratio numerator
   val DigitClass = """[0-9]""" // digit_ratio numerator
   val AlphaClass = """[A-Za-z]""" // pydantic validator alpha ratio
-  val PunctFeatureClass = """[.,!?;:'"()\-]""" // P6 punct_ratio set (10 chars)
   val PunctSpamClass = """[!?.,;:]""" // Q4 spam punct set (6 chars)
 
   // Deterministic heuristic language detector replacing `langdetect`

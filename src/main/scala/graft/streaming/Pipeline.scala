@@ -27,7 +27,7 @@ import graft.ops.Clean
   * Dedup uses [[Streams.dedupTagged]] (duplicates marked, not dropped), so
   * every dedup-dropped record emits a `duplicate` issue into the SAME issue
   * sink as the quality issues — the reference's per-duplicate emission
-  * (faust_app.py:113-124), previously only available as a batch diff.
+  * (faust_app.py:113-124).
   */
 final class Pipeline(
     cleanedSink: BatchSink,
@@ -43,7 +43,7 @@ final class Pipeline(
       .foreachBatch { (batch: DataFrame, id: Long) =>
         // persist the NARROW tagged batch (10 cols + flag) so the stateful
         // dedup op runs exactly once; the wide annotate output is persisted
-        // by routeBatch for the two issue/cleaned branches. (Measured: this
+        // below for the cleaned/issues/topic branches. (Measured: this
         // beats caching only the wide annotated frame — building the
         // columnar cache for struct/array-heavy rows costs more than the
         // extra codegen'd annotate pass it saves.)
@@ -117,27 +117,16 @@ object Pipeline {
   val TopicCols: Seq[String] =
     Seq("review_id", "user_id", "date", "accepted", "data_quality_score")
 
-  private def issueShape(keyed: DataFrame): DataFrame =
-    keyed.select(col("review_id"),
+  /** `duplicate` issues for the rows [[Streams.dedupTagged]] marked
+    * (faust_app.py:115-124), same schema as [[graft.ops.Clean.issues]] so
+    * the two fan into one sink.
+    */
+  def taggedDuplicateIssues(tagged: DataFrame): DataFrame =
+    tagged.filter(col("_dup")).select(col("review_id"),
       lit("duplicate").as("issue_type"),
       lit("review_id").as("field_name"),
       concat(col("review_id"), lit(":"), col("date").cast("string"))
         .as("og_value"),
       lit(null).cast("string").as("expected_range"),
       lit(graft.rules.Rules.SevDuplicate).as("severity"))
-
-  /** `duplicate` issues for the rows [[Streams.dedupTagged]] marked — the
-    * streaming-path form (faust_app.py:115-124), same schema as
-    * [[graft.ops.Clean.issues]] so the two fan into one sink.
-    */
-  def taggedDuplicateIssues(tagged: DataFrame): DataFrame =
-    issueShape(tagged.filter(col("_dup")))
-
-  /** Dedup-dropped records as `duplicate` issues — the batch-side diff
-    * variant, for batch jobs that deduped with a plain dropDuplicates and
-    * kept both frames.
-    */
-  def duplicateIssues(batch: DataFrame, deduped: DataFrame): DataFrame =
-    issueShape(batch.select("review_id", "date")
-      .exceptAll(deduped.select("review_id", "date")))
 }

@@ -2,21 +2,19 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.Row
-
-import graft.ops.{Clean, Stats}
 
 /** Structured Streaming wiring (SURVEY §2.9 / E1-E3). The reference's Faust
   * topology maps 1:1:
   *  - Kafka topics -> streaming DataFrames (here file/memory sources; the
   *    kafka format is config-only and broker-gated, see `kafkaSource`);
   *  - the dedup table (1h tumbling, 2h TTL, faust_app.py:77-80) ->
-  *    withWatermark + dropDuplicatesWithinWatermark (divergence noted in
-  *    SURVEY §7: Faust forgets dups across window boundaries, Spark keeps
-  *    keys until watermark expiry);
-  *  - clean/route fork (faust_app.py:95-170) -> one annotated stream,
-  *    filtered twice inside foreachBatch (single pass + persist, exactly the
+  *    [[dedupTagged]], event-time state held until watermark expiry
+  *    (divergence noted in SURVEY §7: Faust forgets dups across window
+  *    boundaries, Spark keeps keys until watermark expiry);
+  *  - clean/route fork (faust_app.py:95-170) -> one annotated stream
+  *    ([[graft.ops.Clean.annotate]]), filtered per sink inside
+  *    [[Pipeline]]'s foreachBatch (single pass + persist, exactly the
   *    reference's one-consume-two-produces shape);
   *  - hourly stats table (faust_app.py:173-189) -> event-time window agg in
   *    update mode;
@@ -26,73 +24,16 @@ import graft.ops.{Clean, Stats}
   */
 object Streams {
 
-  /** The quality pipeline is stateless, so it applies to a streaming
-    * DataFrame unchanged — same code path as batch (E4's point: clean_review
-    * is a pure function).
-    */
-  def annotate(raw: DataFrame): DataFrame = Clean.annotate(raw)
-
-  /** Streaming dedup on the reference's composite key (review_id, date)
-    * with a 2-hour state TTL (faust_app.py:77-80,113).
-    */
-  def dedup(raw: DataFrame, delay: String = "2 hours"): DataFrame =
-    raw.withWatermark("date", delay)
-      .dropDuplicatesWithinWatermark("review_id", "date")
-
-  /** EXACT Faust-window dedup semantics (SURVEY §7 risk register): the
-    * reference dedups within a 1-hour tumbling PROCESSING-time window with
-    * 2-hour state expiry (faust_app.py:77-80) — duplicates are forgotten
-    * across window boundaries, unlike dropDuplicatesWithinWatermark which
-    * holds keys until the event-time watermark passes. This variant uses
-    * flatMapGroupsWithState keyed by (review_id, date) with a processing-
-    * time timeout = the table TTL: first record per key passes, later ones
-    * drop while the state lives, and the key is forgotten on timeout —
-    * exactly the Faust table behavior.
-    *
-    * Cost note: processing-time timeouts make the engine run empty
-    * micro-batches continuously to fire them
-    * (FlatMapGroupsWithStateExec.shouldRunAnotherBatch) — prefer the
-    * idiomatic [[dedup]] (watermark-scoped) unless the Faust boundary
-    * behavior is specifically required.
-    */
-  def dedupFaustStyle(raw: DataFrame, ttl: String = "2 hours")
-      : org.apache.spark.sql.Dataset[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import org.apache.spark.sql.{Encoders, Row}
-    implicit val rowEnc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(raw.schema)
-    implicit val boolEnc = Encoders.scalaBoolean
-    implicit val keyEnc = Encoders.tuple(Encoders.STRING, Encoders.STRING)
-    raw.groupByKey { r: Row =>
-      (r.getAs[String]("review_id"),
-        String.valueOf(r.getAs[java.sql.Timestamp]("date")))
-    }.flatMapGroupsWithState(
-      OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout()) {
-      (_: (String, String), rows: Iterator[Row], state: GroupState[Boolean]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else if (state.exists) {
-          // key seen within TTL -> everything here is a duplicate
-          state.setTimeoutDuration(ttl)
-          Iterator.empty
-        } else {
-          state.update(true)
-          state.setTimeoutDuration(ttl)
-          rows.take(1) // first record wins; same-batch extras drop
-        }
-    }
-  }
-
   /** Streaming dedup that TAGS duplicates instead of dropping them: output
     * is the input schema plus a boolean `_dup` column. Same state semantics
-    * as [[dedup]] (keys held until the event-time watermark passes the key's
-    * event time + delay), but the duplicates stay visible downstream — which
-    * is what the reference's agent needs to emit a `duplicate` issue per
-    * dropped record (faust_app.py:113-124: the table hit doesn't just skip,
-    * it produces to the quality_issues topic). `dropDuplicatesWithinWatermark`
-    * can't do that (drops are silent), hence flatMapGroupsWithState keyed by
-    * the composite (review_id, date) with an event-time timeout.
+    * as `dropDuplicatesWithinWatermark` (keys held until the event-time
+    * watermark passes the key's event time + delay), but the duplicates
+    * stay visible downstream — which is what the reference's agent needs
+    * to emit a `duplicate` issue per dropped record (faust_app.py:113-124:
+    * the table hit doesn't just skip, it produces to the quality_issues
+    * topic). `dropDuplicatesWithinWatermark` can't do that (drops are
+    * silent), hence flatMapGroupsWithState keyed by the composite
+    * (review_id, date) with an event-time timeout.
     *
     * State is one boolean per in-flight key — identical footprint to the
     * built-in dedup operator; eviction via watermark timeout, checkpointed
@@ -277,25 +218,6 @@ object Streams {
           .as("avg_quality_score"))
       .select(col("window.start").as("window_start"), col("total_reviews"),
         col("valid_reviews"), col("avg_quality_score"))
-
-  /** Route one annotated micro-batch to the two sinks (cleaned + issues) in
-    * a single pass — persist once, write twice, like the reference's one
-    * consume / two produces (faust_app.py:156-170).
-    */
-  def routeBatch(annotated: DataFrame)(
-      writeCleaned: DataFrame => Unit, writeIssues: DataFrame => Unit): Unit = {
-    annotated.persist()
-    try {
-      writeCleaned(Clean.cleaned(annotated))
-      writeIssues(Clean.issues(annotated))
-    } finally annotated.unpersist()
-  }
-
-  /** Micro-batch trigger mirroring the sink's 10-second flush
-    * (postgres_sink.py:18-19; the 100-row bound is the micro-batch itself).
-    */
-  def withSinkTrigger[T](w: DataStreamWriter[T]): DataStreamWriter[T] =
-    w.trigger(Trigger.ProcessingTime("10 seconds"))
 
   /** Kafka source/sink wiring (S4/S7/S8) — config-only in Spark; gated on a
     * broker being reachable (none in CI, so tests use memory/file sources;

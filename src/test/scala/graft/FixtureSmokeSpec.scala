@@ -1,12 +1,14 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.ops.Clean
 import graft.sources.Sources
-import graft.streaming.Pipeline
+import graft.streaming.{Pipeline, Streams}
 
 /** The reference's `test_quality.py` smoke, upgraded to assertions
   * (SURVEY §5b): the FIXTURES.md A1 rows — every clean_review branch —
@@ -56,14 +58,21 @@ class FixtureSmokeSpec extends AnyFunSuite with Matchers with TestSpark {
 
   test("the duplicate fixture row is dropped with a severity-7 issue") {
     import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
     val ts = java.sql.Timestamp.valueOf("2024-06-01 12:30:00")
     val r = graft.schema.RawReview("r001", "b01", "u01", Some(5.0),
       "Great food and friendly staff.", ts, Some(3), Some(0), Some(1), "t")
-    val batch = Seq(r, r.copy(useful = Some(4))).toDF()
-    val deduped = batch.dropDuplicates("review_id", "date")
-    deduped.count() shouldBe 1
-    val issues = Pipeline.duplicateIssues(batch, deduped).collect()
-    issues.length shouldBe 1
-    issues.head.getAs[Int]("severity") shouldBe 7
+    val in = MemoryStream[graft.schema.RawReview]
+    val q = Streams.dedupTagged(in.toDF()).writeStream
+      .format("memory").queryName("fixture_dup").outputMode("append").start()
+    try {
+      in.addData(r, r.copy(useful = Some(4)))
+      q.processAllAvailable()
+      val tagged = spark.table("fixture_dup")
+      tagged.filter(!col("_dup")).count() shouldBe 1
+      val issues = Pipeline.taggedDuplicateIssues(tagged).collect()
+      issues.length shouldBe 1
+      issues.head.getAs[Int]("severity") shouldBe 7
+    } finally q.stop()
   }
 }

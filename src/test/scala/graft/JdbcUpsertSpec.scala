@@ -6,8 +6,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
+import graft.ops.Clean
 import graft.schema.RawReview
-import graft.streaming.{JdbcUpsertSink, Streams}
+import graft.streaming.JdbcUpsertSink
 
 /** Simulates a driver that answers executeBatch with SUCCESS_NO_INFO (-2)
   * for every statement (Oracle; MySQL w/ rewriteBatchedStatements): the
@@ -191,13 +192,11 @@ class JdbcUpsertSpec extends AnyFunSuite with Matchers with TestSpark {
       val sink = new JdbcUpsertSink(url, "cleaned_reviews", "review_id",
         updateCols = Seq("data_quality_score", "processing_timestamp"))
       val in = MemoryStream[RawReview]
-      val q = Streams.annotate(in.toDF()).writeStream
+      val q = Clean.annotate(in.toDF()).writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          Streams.routeBatch(batch)(
-            cleaned => sink.upsertBatch(cleaned.selectExpr("review_id",
-              "rating", "data_quality_score",
-              "current_timestamp() AS processing_timestamp"), id),
-            _ => ())
+          sink.upsertBatch(Clean.cleaned(batch).selectExpr("review_id",
+            "rating", "data_quality_score",
+            "current_timestamp() AS processing_timestamp"), id)
         }.start()
       def raw(id: String) = RawReview(id, "b1", "u1", Some(4.0),
         "this is a perfectly fine review of the place",

@@ -181,18 +181,4 @@ class PipelineSpec extends AnyFunSuite with Matchers
       catch { case _: SQLException => () }
     }
   }
-
-  test("dedup-dropped records become duplicate issues (batch diff)") {
-    import spark.implicits._
-    val batch = Seq(
-      raw("r1", "2024-01-01 10:00:00", "the text one"),
-      raw("r1", "2024-01-01 10:00:00", "the text one again"),
-      raw("r2", "2024-01-01 10:10:00", "the text two")).toDF()
-    val deduped = batch.dropDuplicates("review_id", "date")
-    val dups = Pipeline.duplicateIssues(batch, deduped).collect()
-    dups.length shouldBe 1
-    dups.head.getAs[String]("issue_type") shouldBe "duplicate"
-    dups.head.getAs[Int]("severity") shouldBe 7
-    dups.head.getAs[String]("og_value") should startWith("r1:")
-  }
 }

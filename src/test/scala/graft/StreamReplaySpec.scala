@@ -23,7 +23,7 @@ import graft.streaming.{StreamEmbedDedup, StreamMediaDedup, StreamTextDedup,
   * (is_dup/keep + matched_id + score), not row counts.
   *
   * Also pinned: a re-delivery of the same CONTENT under a NEW batch id
-  * (at-least-once file re-appearance, the FirehoseBench replay-leg
+  * (at-least-once file re-appearance, the IngestBench firehose replay-leg
   * shape) re-emits the same verdicts AND folds nothing — the
   * already-standing anti-join guard, without which the containment tier
   * would double per-pair shared counts and any per-list statistic would

@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,11 +10,11 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.ops.Clean
 import graft.schema.RawReview
-import graft.streaming.{Streams, UpsertSink}
+import graft.streaming.{BatchSink, Pipeline, Streams, UpsertSink}
 
 /** Structured Streaming behavior: the clean pipeline over a micro-batched
-  * stream, watermarked dedup (drop + state expiry), windowed stats in update
-  * mode, and the idempotent foreachBatch upsert (SURVEY §2.4, §2.9, E2/E3).
+  * stream, watermarked dedup, windowed stats in update mode, and the
+  * idempotent foreachBatch upsert (SURVEY §2.4, §2.9, E2/E3).
   */
 class StreamingSpec extends AnyFunSuite with Matchers with TestSpark {
 
@@ -27,7 +29,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with TestSpark {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[RawReview]
-    val q = Streams.annotate(in.toDF()).writeStream
+    val q = Clean.annotate(in.toDF()).writeStream
       .format("memory").queryName("ann_out").outputMode("append").start()
     try {
       in.addData(raw("r1", "2024-01-01 10:00:00"),
@@ -40,11 +42,11 @@ class StreamingSpec extends AnyFunSuite with Matchers with TestSpark {
     } finally q.stop()
   }
 
-  test("dropDuplicatesWithinWatermark dedups on (review_id, date)") {
+  test("tagged dedup drops repeats of (review_id, date)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[RawReview]
-    val q = Streams.dedup(in.toDF()).writeStream
+    val q = Streams.dedupTagged(in.toDF()).filter(!col("_dup")).writeStream
       .format("memory").queryName("dedup_out").outputMode("append").start()
     try {
       in.addData(raw("r1", "2024-01-01 10:00:00"),
@@ -55,37 +57,11 @@ class StreamingSpec extends AnyFunSuite with Matchers with TestSpark {
     } finally q.stop()
   }
 
-  test("Faust-style dedup: first wins within TTL, key-scoped state (FMGWS)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[RawReview]
-    val q = Streams.dedupFaustStyle(in.toDF()).writeStream
-      .format("memory").queryName("fmgws_out").outputMode("append").start()
-    // NOTE processing-time timeouts make the engine re-run empty batches
-    // continuously (FlatMapGroupsWithStateExec.shouldRunAnotherBatch), so
-    // processAllAvailable never settles — poll the sink instead.
-    def awaitCount(n: Long): Unit = {
-      val deadline = System.currentTimeMillis() + 60000
-      while (spark.table("fmgws_out").count() < n &&
-        System.currentTimeMillis() < deadline) Thread.sleep(100)
-    }
-    try {
-      in.addData(raw("r1", "2024-01-01 10:00:00"),
-        raw("r1", "2024-01-01 10:00:00")) // same-batch dup -> dropped
-      awaitCount(1)
-      spark.table("fmgws_out").count() shouldBe 1
-      in.addData(raw("r1", "2024-01-01 10:00:00"), // cross-batch dup -> dropped
-        raw("r1", "2024-01-01 11:00:00")) // new (id, date) key -> kept
-      awaitCount(2)
-      spark.table("fmgws_out").count() shouldBe 2
-    } finally q.stop()
-  }
-
   test("hourly stats aggregate in update mode with event-time windows") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[RawReview]
-    val q = Streams.hourlyStats(Streams.annotate(in.toDF())).writeStream
+    val q = Streams.hourlyStats(Clean.annotate(in.toDF())).writeStream
       .format("memory").queryName("stats_out").outputMode("complete").start()
     try {
       in.addData(
@@ -108,18 +84,18 @@ class StreamingSpec extends AnyFunSuite with Matchers with TestSpark {
     val in = MemoryStream[RawReview]
     val cleanedSink = new UpsertSink("review_id")
     val issuesSeen = new java.util.concurrent.atomic.AtomicLong
-    val q = Streams.annotate(in.toDF()).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        Streams.routeBatch(batch)(
-          cleaned => cleanedSink.write(cleaned, id),
-          issues => issuesSeen.addAndGet(issues.count()))
-      }.start()
+    val issueSink = new BatchSink {
+      def write(df: DataFrame, id: Long): Unit = issuesSeen.addAndGet(df.count())
+    }
+    val checkpoint = Files.createTempDirectory("graft-route").toString
+    val q = new Pipeline(cleanedSink, issueSink).start(in.toDF(), checkpoint)
     try {
       in.addData(raw("r1", "2024-01-01 10:00:00"),
         raw("r2", "2024-01-01 10:30:00", text = "the x"))
       q.processAllAvailable()
-      // replay the same data (at-least-once) -> same keys, same store size
-      in.addData(raw("r1", "2024-01-01 10:00:00"))
+      // redeliver r1 under a new event time: a new dedup key, so it reaches
+      // the sink again -> same key, same store size
+      in.addData(raw("r1", "2024-01-01 11:00:00"))
       q.processAllAvailable()
       cleanedSink.size shouldBe 1 // r1 upserted twice under one key
       issuesSeen.get() should be >= 1L // r2's too_short

@@ -75,7 +75,7 @@ class SubstrSharedSpec extends AnyFunSuite with Matchers with TestSpark {
     val noPairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     spark.conf.set("spark.graft.cc.localMaxEdges", "0")
     try {
-      val out = TextDedup.dedupClustersStar(corpus, noPairs)
+      val out = TextDedup.dedupClusters(corpus, noPairs)
       out.collect().map(_.getLong(0)).sorted shouldBe Array(1L, 2L)
       TextDedup.lastStarRounds should be >= 1
     } finally spark.conf.unset("spark.graft.cc.localMaxEdges")

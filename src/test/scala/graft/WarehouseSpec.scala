@@ -58,12 +58,13 @@ class WarehouseSpec extends AnyFunSuite with Matchers with TestSpark {
 
   test("streaming dedup runs on the RocksDB state store provider") {
     import spark.implicits._
+    import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
     spark.conf.set(Monitor.RocksDbConf._1, Monitor.RocksDbConf._2)
     try {
       val in = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[graft.schema.RawReview]
-      val q = Streams.dedup(in.toDF()).writeStream
+      val q = Streams.dedupTagged(in.toDF()).filter(!col("_dup")).writeStream
         .format("memory").queryName("rocks_out").outputMode("append").start()
       try {
         val ts = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
