@@ -164,69 +164,25 @@ object Relational {
     * compute exact linear-interpolated quantiles over the sorted values;
     * approx_percentile/HLL sketches are deliberately not oracle-paired).
     *
-    * Scale lineage: `percentile()` is a TypedImperativeAggregate whose
-    * per-group buffer holds EVERY distinct value and merges
-    * single-threaded on one reducer per group — rejected in r9 for a
-    * (flag, kind, value) histogram + per-key windows. r12 retires THAT
-    * shape too: the "domain-bounded" histogram is near-row-count-sized
-    * on cent-quantized prices and its per-key window is a single-task
-    * sort (details at the implementation comment below). The current
-    * form is the classic three-pass distributed percentile: scalar
-    * stats, bucket counts locating the target ranks, value detail only
-    * inside target buckets.
-    *
-    * The interpolation mirrors Spark's own `Percentile.getPercentile`
-    * bit for bit — position = pct·(n−1); short-circuit on integral
-    * position OR equal neighbor values; else (hi−pos)·v_lo +
-    * (pos−lo)·v_hi — so the output is hash-identical to the
-    * `percentile()` form (and to DuckDB's quantile_cont oracle, which
-    * uses the same formula). The value at index ⌈pos⌉ is the SAME
-    * histogram row when its multiplicity covers both indexes, else
-    * `lead(value)`.
+    * Shape: the exploded (flag, kind, value) stream collapses on arrival
+    * into the value-level histogram vHist = groupBy(flag, kind, vd)
+    * count — the only corpus-sized exchange, partial-aggregated, its
+    * rows bounded by distinct (flag, kind, value) triples. Spark's native
+    * `percentile(vd, pcts, cnt)` then runs per (flag, kind) over
+    * histogram rows only: its buffer is a value -> multiplicity map, so
+    * it never sees raw rows (the r9 regression was `percentile()` over
+    * raw rows, one reducer per flag). `Percentile.getPercentile` is the
+    * interpolation DuckDB's quantile_cont oracle uses — position =
+    * pct·(n−1), (hi−pos)·v_lo + (pos−lo)·v_hi — so the output is exact.
+    * It replaced a 256-bucket cumulative-window chain that ran 16
+    * sequential jobs per execution, 2 of them at construction.
     *
     * A 100 TB consumer with values NOT drawn from a bounded domain
     * should use the sketch tier: [[graft.ops.Sketches.approxPercentiles]]
     * (rank error ≤ n/PctAccuracy, pinned in SketchesSpec) and
     * [[graft.ops.Sketches.approxDistinct]] (HLL).
     */
-  val HistBuckets = 256
-
   def priceStats(spark: SparkSession, dir: String): DataFrame = {
-    // r13 rewrite of the r12 three-pass shape: the percentile chain now
-    // makes ONE pass over lineitem instead of three, and the expensive
-    // count_distinct scan no longer gates it.
-    //
-    //   1. the exploded (flag, kind, value) stream collapses immediately
-    //      into the VALUE-LEVEL histogram vHist = groupBy(flag, kind, vd)
-    //      count — one partial-aggregated corpus exchange of quantized
-    //      (flag, kind, value) rows, checkpointed once (lazy — the first
-    //      action materializes it; plan-only consumers run no job);
-    //   2. per-(flag, kind) min/max/n derive FROM vHist (min/max ignore
-    //      multiplicity; n = Σ cnt = the non-null row count), so the r12
-    //      bucket function — 256 order-preserving linear buckets between
-    //      the key's min/max — becomes a pure map over the ~|distinct
-    //      values| histogram, not a second corpus scan + broadcast gate;
-    //   3. bucket counts (Σ cnt per bucket) + their running sum locate
-    //      the buckets containing the target ranks floor/ceil(pct·(n−1)),
-    //      exactly as in r12;
-    //   4. the value detail inside target buckets is vHist FILTERED by
-    //      the broadcast target set — already value-aggregated, no third
-    //      corpus pass; within-bucket running count + bucket base
-    //      reproduce the global cumulative EXACTLY, and Spark's
-    //      Percentile.getPercentile interpolation runs bit-identically
-    //      on the pick rows (same arithmetic as r12/r9 — the oracle is
-    //      untouched).
-    //
-    // keyStats (counts + exact distinct part/supp keys, with its Expand)
-    // keeps its own scan but is now an INDEPENDENT subtree consumed only
-    // by the final join — it overlaps the percentile chain instead of
-    // gating it. Plan: 5 lineitem scans -> 2; the r12 ~15-wave sequential
-    // chain loses the kindStats gate, one corpus scan and the detail
-    // re-aggregation. At 100 TB nothing corpus-sized crosses an exchange
-    // except the single partial-aggregated vHist build (rows bounded by
-    // distinct (flag, kind, value) triples), and no single-task window
-    // ever sees more than one bucket's detail. Degenerate distributions
-    // (all rows one value) collapse to one bucket, never worse.
     val li = Par.fanOut(Tables.load(spark, dir, "lineitem")
       .select("l_returnflag", "l_extendedprice", "l_quantity",
         "l_partkey", "l_suppkey"), key = "l_extendedprice")
@@ -239,100 +195,23 @@ object Relational {
         count_distinct(col("l_partkey")).as("n_parts_c"),
         count_distinct(col("l_suppkey")).as("n_supps_c"))
 
-    // the (flag, kind, value) stream for p/q, collapsed on arrival into
-    // the value-level histogram — the chain's ONLY corpus-sized exchange
-    val exploded = li.select(col("l_returnflag"), explode(array(
+    val vHist = li.select(col("l_returnflag"), explode(array(
         struct(lit("p").as("kind"), col("l_extendedprice").as("vd")),
         struct(lit("q").as("kind"), col("l_quantity").as("vd")))).as("e"))
       .select(col("l_returnflag"), col("e.kind").as("kind"),
         col("e.vd").as("vd"))
       .filter(col("vd").isNotNull)
-    val vHist = exploded
       .groupBy("l_returnflag", "kind", "vd")
       .agg(count(lit(1)).as("cnt"))
-      // one materialization, three consumers (mm, bucket counts, target
-      // detail); LAZY — back-to-back same-boot bench A/B (matched probes
-      // 0.54/0.58) measured lazy med 2.77 / min 2.45 vs eager med 3.40 /
-      // min 3.30, no checkpoint at all ~3.7-5.0 (ReusedExchange does not
-      // unify the three consumers); lazy also keeps plan-only consumers
-      // (PlanAudit) from running jobs at construction
-      .localCheckpoint(false)
 
-    // per-(flag, kind) min/max/n FROM the histogram: min/max are
-    // multiplicity-blind and n = Σ cnt — identical values to the r12
-    // corpus-scan kindStats, at histogram cost
-    val mm = vHist.groupBy("l_returnflag", "kind")
-      .agg(min(col("vd")).as("_mn"), max(col("vd")).as("_mx"),
-        sum(col("cnt")).as("n"))
-    val bucketed = vHist
-      .join(broadcast(mm), Seq("l_returnflag", "kind"))
-      .withColumn("_bkt",
-        when(col("_mx") > col("_mn"),
-          least(lit(HistBuckets - 1),
-            floor((col("vd") - col("_mn")) /
-              ((col("_mx") - col("_mn")) / HistBuckets))))
-          .otherwise(lit(0L)))
-      .drop("_mn", "_mx")
-
-    // bucket counts (<= |flags| x 2 x HistBuckets rows) + the
-    // bucket-level running sum that locates the target ranks
-    val wB = Window.partitionBy("l_returnflag", "kind").orderBy("_bkt")
-    val bktCum = bucketed.groupBy("l_returnflag", "kind", "_bkt")
-      .agg(sum(col("cnt")).as("_c"), max(col("n")).as("n"))
-      .withColumn("_bcum", sum("_c").over(wB))
-      .withColumn("_bbase", col("_bcum") - col("_c"))
-    def posOf(pct: Double): Column =
-      lit(pct) * (col("n") - 1).cast("double")
-    def containsRank(r: Column): Column =
-      r >= col("_bbase") && r <= col("_bcum") - 1
-    def targetFor(pct: Double): Column =
-      containsRank(floor(posOf(pct))) || containsRank(ceil(posOf(pct)))
-    val targets = bktCum.filter(
-        (col("kind") === "p" && (targetFor(0.5) || targetFor(0.95))) ||
-        (col("kind") === "q" && targetFor(0.5)))
-      .select(col("l_returnflag"), col("kind"), col("_bkt"),
-        col("_bbase"))
-
-    // value detail inside target buckets only — vHist is already
-    // value-aggregated, so this is a broadcast-pruned filter, not a
-    // third pass; global cumulative = bucket base + running count
-    val detail = bucketed
-      .join(broadcast(targets), Seq("l_returnflag", "kind", "_bkt"))
-    val wBkt = Window.partitionBy("l_returnflag", "kind", "_bkt")
-      .orderBy("vd")
-    // lead over the SELECTED rows: consulted only when ceil(pos) crosses
-    // into the next histogram row — which is then in the adjacent
-    // selected bucket by the hi-rank containment filter above
-    val wKind = Window.partitionBy("l_returnflag", "kind")
-      .orderBy("_bkt", "vd")
-    val cum = detail
-      .withColumn("cum", col("_bbase") + sum("cnt").over(wBkt))
-      .withColumn("nxt", lead(col("vd"), 1).over(wKind))
-
-    // Spark Percentile.getPercentile, expressed over the histogram: the
-    // row whose index range [cum-cnt, cum-1] contains ⌊pos⌋ carries the
-    // result; null on every other row
-    def pick(pct: Double): Column = {
-      val pos = posOf(pct)
-      val lo = floor(pos)
-      val hi = ceil(pos)
-      val vLo = col("vd")
-      val vHi = when(hi <= col("cum") - 1, col("vd")).otherwise(col("nxt"))
-      val res = when(hi === lo || vHi === vLo, vLo)
-        .otherwise((hi.cast("double") - pos) * vLo +
-          (pos - lo.cast("double")) * vHi)
-      when(lo >= col("cum") - col("cnt") && lo <= col("cum") - 1, res)
-    }
-
-    val picks = cum
-      .withColumn("m50", pick(0.5))
-      .withColumn("m95", when(col("kind") === "p", pick(0.95)))
-      .filter(col("m50").isNotNull || col("m95").isNotNull)
+    def pct(kind: String, i: Int): Column =
+      round(max(when(col("kind") === kind, col("pct")(i))), 2)
+    val picks = vHist.groupBy("l_returnflag", "kind")
+      .agg(percentile(col("vd"), array(lit(0.5), lit(0.95)), col("cnt"))
+        .as("pct"))
       .groupBy("l_returnflag")
-      .agg(
-        round(max(when(col("kind") === "p", col("m50"))), 2).as("p50_price"),
-        round(max(when(col("kind") === "p", col("m95"))), 2).as("p95_price"),
-        round(max(when(col("kind") === "q", col("m50"))), 2).as("p50_qty"))
+      .agg(pct("p", 0).as("p50_price"), pct("p", 1).as("p95_price"),
+        pct("q", 0).as("p50_qty"))
 
     // flags appear iff they carried >= 1 non-null statistic row (the r9
     // hist-row condition); zero distinct keys read back as NULL exactly

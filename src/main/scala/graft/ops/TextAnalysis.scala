@@ -439,10 +439,11 @@ object TextAnalysis {
     // whole tokenize+tf pass ran TWICE (main stream + the broadcast df
     // build). tf is (doc, word)-distinct — corpus-compressed — so the
     // checkpoint is far cheaper than the repeated pass it removes.
-    // lazy (r13, advisor note): eager ran the tokenize+tf job at
-    // DataFrame CONSTRUCTION time, so plan-only consumers (PlanAudit)
-    // executed a full cluster job just to build the plan; the
-    // first real action materializes the checkpoint all the same
+    // lazy (r13): eager ran the tokenize+tf job itself at DataFrame
+    // construction. Lazy does NOT make construction job-free: under AQE
+    // `localCheckpoint(false)` still runs every shuffle map stage below
+    // it when the plan is built (q_keyterms: 1 job at construction;
+    // q_ccnet_buckets: 10). The first real action materializes it
     val tf = toks.groupBy("doc_id", "word")
       .agg(count(lit(1)).as("tf"))
       .localCheckpoint(false)

@@ -1165,7 +1165,7 @@ object TextDedup {
       // one materialization, two consumers (r13): the keeper aggregate
       // and the kept-join stream both hang off the chunk build, so the
       // words+slice+concat chunking pass ran twice per execution. Lazy
-      // per the priceStats A/B.
+      // per the r13 lazy/eager A/B (OPTIMIZATION_r13.md §3).
       .localCheckpoint(false)
     // only DUPLICATED chunks need a keeper row (a unique chunk's sole
     // occurrence IS its first occurrence): filtering the join's build
@@ -1379,7 +1379,8 @@ object TextDedup {
       // one materialization, three consumers (r13): the gram build, the
       // covered-rebuild join and the final projection each re-derived
       // the increment (a documents scan + filter + rebuild per branch).
-      // Lazy per the priceStats A/B; increment-sized either way.
+      // Lazy per the r13 lazy/eager A/B (OPTIMIZATION_r13.md §3);
+      // increment-sized either way.
       .localCheckpoint(false)
     val grams = base
       .filter(col("n_words") >= k)
@@ -1498,8 +1499,9 @@ object TextDedup {
       // corpus-sized (same class as the gram checkpoint below) and n_
       // tokens ≡ the former BpeTokenCount(text) by the shared encoder
       // (size(BpeSymbols) — the equivalence the final projection already
-      // relied on, pinned in its spec). Lazy per the priceStats A/B;
-      // the eager gram checkpoint materializes it at construction.
+      // relied on, pinned in its spec). Lazy per the r13 lazy/eager A/B
+      // (OPTIMIZATION_r13.md §3); the eager gram checkpoint materializes
+      // it at construction.
       .localCheckpoint(false)
     val symsOf = transform(col("_syms"), s => s("sym"))
     val grams = base

@@ -152,20 +152,12 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with TestSpark {
     // + tiny totals + output sort
     "q_source_overlap" -> 12,
     "q_minhash_pairs" -> 7, // see q_jaccard_pairs (r12 memoized candidates)
-    // r9: +1 over the percentile() form — fanOut + the full-parallel
-    // (flag, kind, value) histogram agg + the domain-bounded window +
-    // tiny final agg + output sort; the extra exchange carries only
-    // histogram rows and buys removing percentile()'s one-reducer-per-
-    // flag value buffer (the registry's former #1 sf1 cost)
-    // r13 single-scan percentile: the exploded stream collapses into ONE
-    // checkpointed value-level histogram (fanOut + partial/final hist
-    // agg); min/max/n, bucket counts and target detail all derive from
-    // that leaf, keyStats (with its count_distinct Expand) is an
-    // independent parallel subtree, and the windows/picks move only
-    // histogram rows (the r12 shape re-scanned lineitem three times
-    // sequentially; the r9 shape single-task-sorted a ~657k-row value
-    // histogram)
-    "q_price_stats" -> 10, "q_pricing_rollup" -> 3, // +1 r12 fanOut
+    // fanOut (one per static instance: keyStats and the histogram) +
+    // the (flag, kind, value) histogram agg + the native percentile agg
+    // over histogram rows + the (flag, kind) -> flag pivot agg +
+    // keyStats' count_distinct Expand (two aggs) + output sort; the
+    // pivoted picks broadcast into the left join
+    "q_price_stats" -> 8, "q_pricing_rollup" -> 3, // +1 r12 fanOut
     "q_pii_scrub" -> 2, "q_quality_classifier" -> 1,
     // gram explode -> bucket-table agg (broadcast subtree) + per-doc agg
     // + corpus left join + output sort (the r13 stream checkpoint was

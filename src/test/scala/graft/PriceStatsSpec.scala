@@ -1,8 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -137,5 +140,41 @@ class PriceStatsSpec extends AnyFunSuite with Matchers with TestSpark {
       (f, p, q, Some(rnd.nextInt(300).toLong), Some(rnd.nextInt(40).toLong))
     }
     run(writeLineitem(lines)) shouldBe reference(lines)
+  }
+
+  test("building the query submits no Spark job and plans no RDD leaf") {
+    val dir = writeLineitem(cases)
+    // the table handle (and its parquet schema read) is session-scoped,
+    // resolved before the query is built
+    Tables.load(spark, dir, "lineitem")
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    // job groups keep jobs submitted by other threads out of the count
+    def inGroup[T](g: String)(body: => T): T = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val df = inGroup("price-stats-build") {
+        SparkEntry.queries("q_price_stats")(spark, dir)
+      }
+      // listener delivery is asynchronous but ordered: once the sentinel
+      // job's start is seen, every earlier job start has been too
+      inGroup("price-stats-sentinel")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("price-stats-sentinel") &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      groups.contains("price-stats-sentinel") shouldBe true
+      groups.toArray.count(_ == "price-stats-build") shouldBe 0
+      df.queryExecution.analyzed.collectLeaves()
+        .collect { case l: LogicalRDD => l } shouldBe empty
+    } finally sc.removeSparkListener(listener)
   }
 }
