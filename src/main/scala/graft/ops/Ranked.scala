@@ -57,9 +57,9 @@ object Ranked {
       // (q_ccnet_buckets, q_shard_pack) was median-worse back-to-back
       // (3.16->3.51, 1.48->1.70 on comparable windows), unlike the
       // r13 q_price_stats histogram (OPTIMIZATION_r13.md §3) — the two
-      // rank branches race to
-      // materialize a lazy checkpoint under AQE's concurrent stage
-      // submission, while eager materializes once up front
+      // rank branches race to materialize a lazy checkpoint under AQE's
+      // concurrent stage submission, while eager materializes once up
+      // front
       .localCheckpoint(true)
     val wLocal = Window.partitionBy(col("_pid"), col(key))
       .orderBy(order: _*)

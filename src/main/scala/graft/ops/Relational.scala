@@ -174,8 +174,6 @@ object Relational {
     * raw rows, one reducer per flag). `Percentile.getPercentile` is the
     * interpolation DuckDB's quantile_cont oracle uses — position =
     * pct·(n−1), (hi−pos)·v_lo + (pos−lo)·v_hi — so the output is exact.
-    * It replaced a 256-bucket cumulative-window chain that ran 16
-    * sequential jobs per execution, 2 of them at construction.
     *
     * A 100 TB consumer with values NOT drawn from a bounded domain
     * should use the sketch tier: [[graft.ops.Sketches.approxPercentiles]]

@@ -439,11 +439,11 @@ object TextAnalysis {
     // whole tokenize+tf pass ran TWICE (main stream + the broadcast df
     // build). tf is (doc, word)-distinct — corpus-compressed — so the
     // checkpoint is far cheaper than the repeated pass it removes.
-    // lazy (r13): eager ran the tokenize+tf job itself at DataFrame
-    // construction. Lazy does NOT make construction job-free: under AQE
-    // `localCheckpoint(false)` still runs every shuffle map stage below
-    // it when the plan is built (q_keyterms: 1 job at construction;
-    // q_ccnet_buckets: 10). The first real action materializes it
+    // lazy (r13): eager also ran the tokenize+tf result stage at
+    // DataFrame construction. Lazy does NOT make construction job-free:
+    // under AQE `localCheckpoint(false)` still runs every shuffle map
+    // stage below it when the frame is built (q_keyterms submits 1 job
+    // there); only the final stage waits for the first real action
     val tf = toks.groupBy("doc_id", "word")
       .agg(count(lit(1)).as("tf"))
       .localCheckpoint(false)
