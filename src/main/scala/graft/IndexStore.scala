@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,44 +30,31 @@ import org.apache.spark.sql.functions._
   *    value-identical to a rebuilt one and every consumer query stays
   *    oracle-exact either way.
   *
-  * Storage layout (v3): SEGMENTS + MANIFESTS, the log-structured shape
-  * every production table/index format converges on (Iceberg/Delta
-  * snapshots, Lucene segments):
+  * Storage layout (v3): a [[SegmentLog]], which holds the publish,
+  * manifest and sweep mechanism; this object keeps the layout and policy:
   *
   *  - `seg/<name>-<fp>-<sig>/` — immutable parquet segment directories,
   *    content-addressed by the signature of the SOURCE rows they index;
   *  - `man/<name>-<fp>-<sig>.json` — a manifest per servable index: the
-  *    list of segment names whose multiset union IS the index for that
-  *    source signature.
+  *    JSON list of segment names whose multiset union IS the index for
+  *    that source signature. A manifest that does not parse (torn by a
+  *    crash) reads as absent, so the index is rebuilt and republished.
   *
   * A fresh build writes one segment + a one-entry manifest. An increment
   * merge ([[mergeOrBuild]]) writes ONLY the increment's segment and a new
   * manifest referencing base segments + the new one — O(increment) bytes,
-  * never a rewrite of the standing index (the v2 layout re-copied base +
-  * increment rows into a new directory per merge: write amplification
-  * that re-writes a 100 TB index for a daily increment). Superseded
-  * manifests stay servable until [[prune]] retires them and sweeps
-  * segments no remaining manifest references.
+  * never a rewrite of the standing index. Superseded manifests stay
+  * servable until [[prune]] retires them and sweeps segments no
+  * remaining manifest references. A compaction is just [[loadOrBuild]]
+  * of the union source: one fresh segment and a one-entry manifest,
+  * after which [[prune]] retires the long chain.
   *
-  * Concurrency: writers build into a process-unique temp dir and publish
-  * with an atomic rename; racing publishers of the same (name, signature)
-  * are idempotent (first move wins, losers discard — the content is
-  * identical by determinism). Manifest writes are atomic single-file
-  * renames; two racers of the same signature may structure the same
-  * multiset differently (one segment from a full build vs several from a
-  * merge chain) but the served ROWS are identical either way, so
+  * Concurrency: racing publishers of the same (name, signature) build
+  * identical content by determinism, so the segment race is won by the
+  * first rename. Two racers of the same signature may structure the same
+  * multiset differently (one segment from a full build vs several from
+  * a merge chain) but the served ROWS are identical either way, so
   * last-write-wins on the manifest file is safe.
-  *
-  * Scale shape: each persisted index is small relative to its corpus
-  * (centroids/codebooks are KB; codes are M bytes/vector; the band index
-  * is a skinny projection), and on a real cluster the same layout maps
-  * to a shared object-store prefix — segment publish = multipart upload +
-  * final marker, manifest publish = single-key put, both the primitives
-  * object stores make atomic. A year of daily increments is a 365-segment
-  * manifest; real deployments periodically compact (a compaction is just
-  * [[loadOrBuild]] of the union source — it writes one fresh segment and
-  * a one-entry manifest, after which [[prune]] retires the long chain).
-  * Disabled with GRAFT_INDEX=off.
   */
 object IndexStore {
 
@@ -81,9 +68,6 @@ object IndexStore {
     * so they control freshness).
     */
   @volatile var rootOverride: Option[String] = None
-
-  def enabled: Boolean =
-    !sys.env.get("GRAFT_INDEX").exists(v => v == "off" || v == "0")
 
   def root: String = rootOverride.getOrElse(
     sys.env.getOrElse("GRAFT_INDEX_DIR",
@@ -165,56 +149,19 @@ object IndexStore {
   private def manFile(entry: String): Path =
     Paths.get(root, "man", s"$entry.json")
 
-  /** Build into a process-unique temp dir, publish with an atomic rename;
-    * racing publishers of identical content are idempotent.
-    */
-  private def publishSegment(entry: String, content: => DataFrame): Unit = {
-    val dir = segDir(entry)
-    if (Files.exists(dir.resolve("_SUCCESS"))) return
-    Files.createDirectories(Paths.get(root, "seg"))
-    val tmp = Paths.get(root, "seg",
-      s".tmp-$entry-${ProcessHandle.current.pid}-${System.nanoTime}")
-    content.write.mode("overwrite").parquet(tmp.toString)
-    try Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      // the exception type for rename-onto-existing-dir is filesystem-
-      // dependent (Linux ENOTEMPTY arrives as a GENERIC FileSystemException,
-      // not DirectoryNotEmptyException — caught by the concurrency spec), so
-      // resolve the race by OUTCOME: if a complete segment is now published
-      // at the target, a racing publisher won and our identical build is
-      // discarded; anything else is a real publish failure and propagates
-      case e: java.nio.file.FileSystemException =>
-        if (Files.exists(dir.resolve("_SUCCESS"))) deleteRecursively(tmp)
-        else { deleteRecursively(tmp); throw e }
-    }
-  }
-
-  /** Atomic single-file manifest publish. A same-name race writes a
-    * value-identical multiset (possibly structured over different
-    * segments — see the object doc), so rename-replace is safe.
-    */
-  private def writeManifest(entry: String, segments: Seq[String]): Unit = {
-    Files.createDirectories(Paths.get(root, "man"))
-    val tmp = Paths.get(root, "man",
-      s".tmp-$entry-${ProcessHandle.current.pid}-${System.nanoTime}")
-    Files.writeString(tmp,
+  private def writeManifest(entry: String, segments: Seq[String]): Unit =
+    SegmentLog.writeManifest(manFile(entry),
       segments.map(s => "\"" + s + "\"").mkString("[", ",", "]"))
-    Files.move(tmp, manFile(entry), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
 
-  /** Manifest contents, or None if this signature was never published.
-    * Segment names never contain quotes/escapes (hex + word chars), so
-    * the parse is a plain split.
+  /** Manifest contents, or None if this signature was never published or
+    * its manifest is torn. Segment names never contain quotes/escapes
+    * (hex + word chars), so the parse is a plain split.
     */
-  private def readManifest(entry: String): Option[Seq[String]] = {
-    val f = manFile(entry)
-    if (!Files.exists(f)) return None
-    val body = Files.readString(f).trim.stripPrefix("[").stripSuffix("]")
-    Some(if (body.isEmpty) Nil
-    else body.split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\"")))
-  }
+  private val ManifestBody = """(?s)\s*\[(.+)\]\s*""".r
+  private def readManifest(entry: String): Option[Seq[String]] =
+    SegmentLog.readManifest(manFile(entry)) { case ManifestBody(list) =>
+      list.split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
+    }
 
   /** The served frame: the multiset union of the manifest's segments.
     * Union-of-reads (not one multi-path scan) so a segment listed twice
@@ -226,20 +173,31 @@ object IndexStore {
     segments.map(s => spark.read.parquet(segDir(s).toString))
       .reduce(_.unionByName(_))
 
-  /** Ensure (name, params, sig) is published and return its manifest's
-    * segment list — publishing a fresh single-segment manifest from
-    * `build` if this signature has never been indexed.
+  /** Serve `entry`'s manifest from disk, or the segment list `create`
+    * publishes when the manifest is absent or torn.
     */
-  private def ensure(sig: Sig, name: String, params: String)
-                    (build: => DataFrame): Seq[String] = {
-    val entry = entryName(name, params, sig)
-    readManifest(entry).getOrElse {
-      builds.incrementAndGet()
-      publishSegment(entry, build)
-      writeManifest(entry, Seq(entry))
-      Seq(entry)
+  private def serve(spark: SparkSession, entry: String)
+                   (create: => Seq[String]): DataFrame =
+    readSegments(spark, readManifest(entry) match {
+      case Some(segs) => loads.incrementAndGet(); segs
+      case None => create
+    })
+
+  /** Publish a fresh single-segment index for `entry` from `build` (a
+    * segment already complete on disk is kept, not rebuilt).
+    */
+  private def publishFresh(entry: String, build: => DataFrame): Seq[String] = {
+    builds.incrementAndGet()
+    SegmentLog.publish(segDir(entry)) { tmp =>
+      build.write.parquet(tmp.toString)
+      true
     }
+    writeManifest(entry, Seq(entry))
+    Seq(entry)
   }
+
+  private def ensure(entry: String)(build: => DataFrame): Seq[String] =
+    readManifest(entry).getOrElse(publishFresh(entry, build))
 
   /** Serve the index for (name, params, signature-of-source) from disk,
     * building and publishing it first if this corpus snapshot has never
@@ -249,13 +207,8 @@ object IndexStore {
   def loadOrBuild(spark: SparkSession, name: String, source: DataFrame,
                   params: String = "")
                  (build: => DataFrame): DataFrame = {
-    if (!enabled) return build
-    val sig = sigOf(source)
-    val segments = readManifest(entryName(name, params, sig)) match {
-      case Some(segs) => loads.incrementAndGet(); segs
-      case None => ensure(sig, name, params)(build)
-    }
-    readSegments(spark, segments)
+    val entry = entryName(name, params, sigOf(source))
+    serve(spark, entry)(publishFresh(entry, build))
   }
 
   /** The daily-increment path: serve the index for corpus ∪ increment by
@@ -294,35 +247,28 @@ object IndexStore {
     * builds are deterministic, so the racing publishers' outputs are
     * value-identical and first-rename-wins is safe. The shared BASE index
     * both merges consult through [[loadOrBuild]] races the same way —
-    * both may build it, one publishes, both read the published copy. A
-    * directory is only ever created by the atomic rename of a fully
-    * written temp dir, so a visible `_SUCCESS` always denotes complete
-    * content; losers discard their temp dirs.
+    * both may build it, one publishes, both read the published copy
+    * ([[SegmentLog.publish]] resolves the segment race).
     */
   def mergeOrBuild(spark: SparkSession, name: String,
                    baseSource: DataFrame, incrementSource: DataFrame,
                    params: String = "")
                   (buildBase: => DataFrame)
                   (buildIncrement: => DataFrame): DataFrame = {
-    if (!enabled) return buildBase.unionByName(buildIncrement)
     val sigB = sigOf(baseSource)
     val sigI = sigOf(incrementSource)
     val combined = entryName(name, params, sigB.combine(sigI))
-    val segments = readManifest(combined) match {
-      case Some(segs) => loads.incrementAndGet(); segs
-      case None =>
-        merges.incrementAndGet()
-        // base: whatever manifest already serves it (one segment from a
-        // full build, many from a merge chain) — its files are NOT
-        // touched; increment: one fresh segment, also published under
-        // its own signature so the same increment indexes once
-        val baseSegs = ensure(sigB, name, params)(buildBase)
-        val incSegs = ensure(sigI, name, params)(buildIncrement)
-        val merged = baseSegs ++ incSegs
-        writeManifest(combined, merged)
-        merged
+    serve(spark, combined) {
+      merges.incrementAndGet()
+      // base: whatever manifest already serves it (one segment from a
+      // full build, many from a merge chain) — its files are NOT
+      // touched; increment: one fresh segment, also published under
+      // its own signature so the same increment indexes once
+      val merged = ensure(entryName(name, params, sigB))(buildBase) ++
+        ensure(entryName(name, params, sigI))(buildIncrement)
+      writeManifest(combined, merged)
+      merged
     }
-    readSegments(spark, segments)
   }
 
   /** Retention: delete every manifest `keep` rejects (by its entry name
@@ -359,43 +305,20 @@ object IndexStore {
     */
   def prune(keep: String => Boolean, graceMillis: Long = 0L): (Int, Int) = {
     val now = System.currentTimeMillis()
+    val tmpCutoff = now - math.max(graceMillis, 3600L * 1000)
     val manDir = Paths.get(root, "man")
     if (!Files.isDirectory(manDir)) return (0, 0)
-    val dead = listDir(manDir)
-      .filter(_.getFileName.toString.endsWith(".json"))
-      .filterNot(p => keep(p.getFileName.toString.stripSuffix(".json")))
-    dead.foreach(Files.deleteIfExists(_))
+    val dead = SegmentLog.sweep(manDir,
+      n => !n.endsWith(".json") || keep(n.stripSuffix(".json")),
+      Long.MaxValue, tmpCutoff)
     // fresh re-list AFTER deletion: manifests published mid-prune (e.g. a
     // racing merge's combined manifest) join the referenced set
-    val referenced = listDir(manDir)
-      .filter(_.getFileName.toString.endsWith(".json"))
-      .flatMap(p => readManifest(p.getFileName.toString.stripSuffix(".json"))
-        .getOrElse(Nil)).toSet
-    val segRoot = Paths.get(root, "seg")
-    def mtime(p: Path): Long =
-      try Files.getLastModifiedTime(p).toMillis catch { case _: Exception => now }
-    val sweepable =
-      if (!Files.isDirectory(segRoot)) Nil
-      else listDir(segRoot)
-        .filter(p => !p.getFileName.toString.startsWith(".tmp-"))
-        .filterNot(p => referenced.contains(p.getFileName.toString))
-        .filter(p => mtime(p) < now - graceMillis)
-    sweepable.foreach(deleteRecursively)
-    // aborted-publish debris: .tmp- entries past the grace age
-    val tmpCutoff = now - math.max(graceMillis, 3600L * 1000)
-    Seq(segRoot, manDir).filter(Files.isDirectory(_)).foreach { d =>
-      listDir(d)
-        .filter(p => p.getFileName.toString.startsWith(".tmp-"))
-        .filter(p => mtime(p) < tmpCutoff)
-        .foreach(deleteRecursively)
-    }
-    (dead.size, sweepable.size)
-  }
-
-  private def listDir(dir: Path): Seq[Path] = {
-    import scala.jdk.CollectionConverters._
-    val s = Files.list(dir)
-    try s.iterator().asScala.toSeq finally s.close()
+    val referenced = SegmentLog.listDir(manDir)
+      .map(_.getFileName.toString).filter(_.endsWith(".json"))
+      .flatMap(n => readManifest(n.stripSuffix(".json")).getOrElse(Nil)).toSet
+    val swept = SegmentLog.sweep(Paths.get(root, "seg"), referenced,
+      now - graceMillis, tmpCutoff)
+    (dead, swept)
   }
 
   /** Age-based retention convenience: retire manifests last modified
@@ -410,11 +333,5 @@ object IndexStore {
       val f = manFile(entry)
       !Files.exists(f) || Files.getLastModifiedTime(f).toMillis >= cutoff
     }, graceMillis = ageMillis)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
-    ()
   }
 }

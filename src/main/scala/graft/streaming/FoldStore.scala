@@ -1,13 +1,13 @@
 package graft.streaming
 
-import java.nio.ByteBuffer
 import java.nio.channels.{FileChannel, OverlappingFileLockException}
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+
+import graft.SegmentLog
 
 /** The durable standing-index store behind the streaming dedup legs
   * ([[IndexLeg]], built by [[StreamMediaDedup]], [[StreamEmbedDedup]]
@@ -69,24 +69,21 @@ import org.apache.spark.sql.types.StructType
   * file count stays bounded at ~(segments alive per cycle), the same
   * steady state as the full merge gave.
   *
-  * Crash consistency: a segment is published by writing to a `.tmp-`
-  * directory and atomically renaming it into place, then the manifest —
-  * a single file, fsynced and atomically rename-replaced, with the
-  * previous manifest kept as `MANIFEST.bak` — is updated to reference
-  * it. The manifest is the sole truth: a crash between segment publish
-  * and manifest write leaves an orphan directory that the next
-  * [[FoldStore.open]] sweeps, and the replayed batch (its id is still
-  * above the manifest's `lastFoldedId`) folds again. A compaction step
-  * publishes the merged bucket slice first, swaps the manifest, and only
-  * retires superseded segment directories with a one-fold GRACE delay
-  * ([[append]] sweeps the previous fold's retirees, [[close]] and
-  * [[FoldStore.open]] sweep the rest) — so a still-evaluating reader of
-  * a pre-swap frame never hits a deleted file, and at no point can a
-  * reader of the current manifest see missing or doubled rows. Torn
-  * manifest writes (power loss mid-write — the file content, not just
-  * the rename, is forced with `FileChannel.force` and the directory
-  * fsynced after the move) fall back to `MANIFEST.bak`: the previous
-  * committed state, whose folds the replayed batch simply re-folds.
+  * Crash consistency: segments and the manifest are published through
+  * [[graft.SegmentLog]]; the manifest is the sole truth. This store's
+  * policy on top: a crash between segment publish and manifest write
+  * leaves an orphan directory that the next [[FoldStore.open]] sweeps,
+  * and the replayed batch (its id is still above the manifest's
+  * `lastFoldedId`) folds again. A compaction step publishes the merged
+  * bucket slice first, swaps the manifest, and only retires superseded
+  * segment directories with a one-fold GRACE delay ([[append]] sweeps
+  * the previous fold's retirees, [[close]] and [[FoldStore.open]] sweep
+  * the rest) — so a still-evaluating reader of a pre-swap frame never
+  * hits a deleted file, and at no point can a reader of the current
+  * manifest see missing or doubled rows. Each manifest write first
+  * stores the last committed state as `MANIFEST.bak`, and a torn
+  * MANIFEST falls back to it: the previous committed state, whose folds
+  * the replayed batch simply re-folds.
   *
   * Concurrency contract: ONE writer per store directory, ENFORCED by an
   * OS file lock (`LOCK`, acquired for the store's lifetime at open) — a
@@ -113,6 +110,8 @@ final class FoldStore private (spark: SparkSession, dir: Path,
   private var cursor: Int = 0
   // retired segment dirs awaiting the grace-delayed sweep (next fold)
   private var pendingSweep: Vector[String] = Vector.empty
+  // the last manifest body committed, which the next write keeps as .bak
+  private var committed: Option[String] = None
 
   // the cross-process single-writer guard, held for the store's lifetime
   private var lockCh: FileChannel = _
@@ -199,9 +198,7 @@ final class FoldStore private (spark: SparkSession, dir: Path,
   def append(stored: DataFrame, foldId: Long): Unit = {
     synchronized {
       sweepPending()
-      publishSegment(stored).foreach { case (nonce, buckets) =>
-        live = live :+ Seg(nonce, buckets, Set.empty)
-      }
+      live = live ++ publishSegment(stored)
       folded = foldId
       writeManifest()
     }
@@ -224,10 +221,8 @@ final class FoldStore private (spark: SparkSession, dir: Path,
   /** Block until any in-flight background compaction step finishes
     * (close() drains it; specs use it for deterministic counts).
     */
-  private[graft] def awaitCompaction(): Unit = {
-    val f = compacting
-    if (f != null) { try f.get() catch { case _: Exception => () }; () }
-  }
+  private[graft] def awaitCompaction(): Unit =
+    Option(compacting).foreach(f => try f.get() catch { case _: Exception => () })
 
   /** One incremental compaction step: merge the cursor's next
     * `compactBuckets` pk buckets across every live segment into one new
@@ -247,7 +242,7 @@ final class FoldStore private (spark: SparkSession, dir: Path,
     val (retired, kept) = live
       .map(s => s.copy(excl = s.excl ++ (s.buckets & window)))
       .partition(_.liveBuckets.isEmpty)
-    live = kept ++ rewritten.map { case (n, b) => Seg(n, b, Set.empty) }
+    live = kept ++ rewritten
     cursor = (cursor + compactBuckets) % prefixParts
     writeManifest()
     pendingSweep ++= retired.map(_.nonce)
@@ -256,7 +251,7 @@ final class FoldStore private (spark: SparkSession, dir: Path,
   /** Delete segment directories retired at least one fold ago. */
   private def sweepPending(): Unit = {
     pendingSweep.foreach(n =>
-      FoldStore.deleteRecursively(dataDir.resolve(s"seg=$n")))
+      SegmentLog.deleteRecursively(dataDir.resolve(s"seg=$n")))
     pendingSweep = Vector.empty
   }
 
@@ -272,12 +267,7 @@ final class FoldStore private (spark: SparkSession, dir: Path,
     */
   def close(): Unit = {
     awaitCompaction()
-    synchronized {
-      compactor.shutdown()
-      sweepPending()
-      if (lock != null) { lock.release(); lock = null }
-      if (lockCh != null) { lockCh.close(); lockCh = null }
-    }
+    synchronized { sweepPending(); release() }
   }
 
   /** Test hook: abandon the store as a crash would — the lock drops
@@ -286,19 +276,19 @@ final class FoldStore private (spark: SparkSession, dir: Path,
     */
   private[graft] def simulateCrash(): Unit = {
     awaitCompaction()
-    synchronized {
-      compactor.shutdown()
-      if (lock != null) { lock.release(); lock = null }
-      if (lockCh != null) { lockCh.close(); lockCh = null }
-      pendingSweep = Vector.empty
-    }
+    synchronized { pendingSweep = Vector.empty; release() }
+  }
+
+  private def release(): Unit = {
+    compactor.shutdown()
+    if (lock != null) { lock.release(); lock = null }
+    if (lockCh != null) { lockCh.close(); lockCh = null }
   }
 
   private def acquireLock(): Unit = {
     lockCh = FileChannel.open(dir.resolve(FoldStore.LockName),
       StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    lock =
-      try lockCh.tryLock()
+    lock = try lockCh.tryLock()
       catch { case _: OverlappingFileLockException => null }
     if (lock == null) {
       lockCh.close()
@@ -308,57 +298,33 @@ final class FoldStore private (spark: SparkSession, dir: Path,
     }
   }
 
-  /** Write `stored` as an immutable segment and atomically publish it
-    * under `data/seg=<nonce>`; None when the frame produced no rows
-    * (parquet writes no pk dirs). One file per touched pk bucket: the
-    * repartition puts each bucket in exactly one task. Returns the
-    * nonce and the set of pk buckets the segment holds files for.
+  /** Write `stored` as an immutable segment and publish it under
+    * `data/seg=<nonce>`; None when the frame produced no rows (parquet
+    * writes no pk dirs). One file per touched pk bucket: the repartition
+    * puts each bucket in exactly one task.
     */
-  private def publishSegment(stored: DataFrame): Option[(String, Set[Int])] = {
+  private def publishSegment(stored: DataFrame): Option[Seg] = {
     val nonce = s"${ProcessHandle.current.pid}-${System.nanoTime()}"
-    val tmp = dir.resolve(s".tmp-$nonce")
-    stored
-      .repartition(math.min(8, prefixParts), col("pk"))
-      .write.mode("overwrite").partitionBy("pk").parquet(tmp.toString)
-    val buckets = FoldStore.listDir(tmp)
-      .map(_.getFileName.toString)
-      .filter(_.startsWith("pk="))
-      .map(_.stripPrefix("pk=").toInt).toSet
-    if (buckets.nonEmpty) {
-      Files.createDirectories(dataDir)
-      Files.move(tmp, dataDir.resolve(s"seg=$nonce"),
-        StandardCopyOption.ATOMIC_MOVE)
-      FoldStore.fsyncDir(dataDir)
-      Some((nonce, buckets))
-    } else {
-      FoldStore.deleteRecursively(tmp)
-      None
+    val seg = dataDir.resolve(s"seg=$nonce")
+    val published = SegmentLog.publish(seg) { tmp =>
+      stored
+        .repartition(math.min(8, prefixParts), col("pk"))
+        .write.partitionBy("pk").parquet(tmp.toString)
+      FoldStore.bucketsOf(tmp).nonEmpty
     }
+    if (published) Some(Seg(nonce, FoldStore.bucketsOf(seg))) else None
   }
 
-  /** Publish the manifest: previous manifest preserved as `.bak`
-    * (the torn-write fallback), new content written + fsynced to a tmp
-    * file, atomically renamed into place, parent directory fsynced —
-    * the full power-loss discipline, not just process-crash atomicity.
+  /** Publish the manifest, keeping the last committed one as `.bak` (the
+    * torn-write fallback). The .bak is written from memory, not copied
+    * from MANIFEST, which may be the torn file this store fell back from.
     */
   private def writeManifest(): Unit = {
     val body = (Seq(FoldStore.FormatMarker, folded.toString, schemaDdl,
       cursor.toString) ++ live.map(FoldStore.segLine)).mkString("\n")
-    val tmp = dir.resolve(s".tmp-man-${System.nanoTime()}")
-    val ch = FileChannel.open(tmp, StandardOpenOption.CREATE,
-      StandardOpenOption.WRITE, StandardOpenOption.TRUNCATE_EXISTING)
-    try { ch.write(ByteBuffer.wrap(body.getBytes(UTF_8))); ch.force(true) }
-    finally ch.close()
-    val man = dir.resolve(FoldStore.ManifestName)
-    if (Files.exists(man)) {
-      val bak = dir.resolve(FoldStore.BackupName)
-      Files.copy(man, bak, StandardCopyOption.REPLACE_EXISTING)
-      val bch = FileChannel.open(bak, StandardOpenOption.WRITE)
-      try bch.force(true) finally bch.close()
-    }
-    Files.move(tmp, man,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    FoldStore.fsyncDir(dir)
+    committed.foreach(SegmentLog.writeManifest(dir.resolve(FoldStore.BackupName), _))
+    SegmentLog.writeManifest(dir.resolve(FoldStore.ManifestName), body)
+    committed = Some(body)
   }
 
   /** Recovery: adopt a parsed manifest's state, sweep orphan segment
@@ -370,22 +336,12 @@ final class FoldStore private (spark: SparkSession, dir: Path,
     folded = m.folded
     cursor = m.cursor
     live = m.segs
+    committed = Some(m.body)
     val referenced = live.map(s => s"seg=${s.nonce}").toSet
-    FoldStore.listDir(dir)
-      .filter(_.getFileName.toString.startsWith(".tmp-"))
-      .foreach(FoldStore.deleteRecursively)
-    if (Files.isDirectory(dataDir))
-      FoldStore.listDir(dataDir)
-        .filterNot(p => referenced.contains(p.getFileName.toString))
-        .foreach(FoldStore.deleteRecursively)
+    SegmentLog.sweep(dir, _ => true, Long.MaxValue, Long.MaxValue)
+    SegmentLog.sweep(dataDir, referenced, Long.MaxValue, Long.MaxValue)
   }
 
-  private def seed(df: DataFrame): Unit = {
-    live = publishSegment(df)
-      .map { case (n, b) => Seg(n, b, Set.empty) }.toVector
-    folded = -1L
-    writeManifest()
-  }
 }
 
 object FoldStore {
@@ -400,12 +356,13 @@ object FoldStore {
     * bucket-slice compaction (a reader serves `buckets -- excl`).
     */
   private[graft] final case class Seg(nonce: String, buckets: Set[Int],
-      excl: Set[Int]) {
+      excl: Set[Int] = Set.empty) {
     def liveBuckets: Set[Int] = buckets -- excl
   }
 
+  /** A parsed manifest, with the body it was parsed from. */
   private[graft] final case class Manifest(folded: Long, schema: String,
-      cursor: Int, segs: Vector[Seg])
+      cursor: Int, segs: Vector[Seg], body: String)
 
   /** Open the store at `dir`, seeding it from `seed` (the initial
     * standing index, stored shape incl. the int `pk` column) only when
@@ -426,30 +383,21 @@ object FoldStore {
     Files.createDirectories(d)
     val k = if (compactBuckets > 0) compactBuckets
       else math.max(1, prefixParts / 8)
-    readManifest(d) match {
-      case Some(m) =>
-        val store = new FoldStore(spark, d, prefixParts, compactAfter, k,
-          m.schema)
-        store.acquireLock()
-        store.recover(m)
-        store
+    val manifest = readManifest(d)
+    lazy val s = seed
+    val store = new FoldStore(spark, d, prefixParts, compactAfter, k,
+      manifest.fold(s.schema.toDDL)(_.schema))
+    store.acquireLock()
+    manifest match {
+      case Some(m) => store.recover(m)
       case None =>
-        val s = seed
-        val store = new FoldStore(spark, d, prefixParts, compactAfter, k,
-          s.schema.toDDL)
-        store.acquireLock()
         // debris from a crash before the first commit (torn first
         // manifest, tmp dirs) must not shadow the fresh seed
-        listDir(d)
-          .filter { p =>
-            val n = p.getFileName.toString
-            n.startsWith(".tmp-") || n == "data" || n == ManifestName ||
-              n == BackupName
-          }
-          .foreach(deleteRecursively)
-        store.seed(s)
-        store
+        SegmentLog.sweep(d, n => !Set("data", ManifestName, BackupName)(n),
+          Long.MaxValue, Long.MaxValue)
+        store.append(s, -1L) // the seed is fold -1: no batch is folded yet
     }
+    store
   }
 
   /** Parse MANIFEST, falling back to MANIFEST.bak when it is missing or
@@ -457,42 +405,30 @@ object FoldStore {
     * exists for). None ⇒ no committed state: the caller seeds fresh.
     */
   private def readManifest(d: Path): Option[Manifest] =
-    parseManifest(d.resolve(ManifestName))
-      .orElse(parseManifest(d.resolve(BackupName)))
+    SegmentLog.readManifest(d.resolve(ManifestName))(parseManifest(d))
+      .orElse(SegmentLog.readManifest(d.resolve(BackupName))(parseManifest(d)))
 
-  private def parseManifest(p: Path): Option[Manifest] = {
-    if (!Files.isRegularFile(p)) None
-    else
-      try {
-        val lines = Files.readString(p).split("\n", -1).toVector
-        if (lines.headOption.contains(FormatMarker)) {
-          // v2: marker, foldId, schema, cursor, seg lines
-          val folded = lines(1).toLong
-          val schema = lines(2)
-          val cursor = lines(3).toInt
-          require(schema.nonEmpty)
-          val segs = lines.drop(4).filter(_.nonEmpty).map(parseSegLine)
-          Some(Manifest(folded, schema, cursor, segs))
-        } else {
-          // v1 (pre-r12): foldId, schema, seg nonces; bucket sets are
-          // recovered from the segment directories on disk
-          val folded = lines.head.toLong
-          val schema = lines(1)
-          require(schema.nonEmpty)
-          val segs = lines.drop(2).filter(_.nonEmpty).map { nonce =>
-            val segDir = p.getParent.resolve("data").resolve(s"seg=$nonce")
-            val buckets =
-              if (Files.isDirectory(segDir))
-                listDir(segDir).map(_.getFileName.toString)
-                  .filter(_.startsWith("pk="))
-                  .map(_.stripPrefix("pk=").toInt).toSet
-              else Set.empty[Int]
-            Seg(nonce, buckets, Set.empty)
-          }
-          Some(Manifest(folded, schema, 0, segs))
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
+  private def parseManifest(d: Path)(body: String): Manifest = {
+    val lines = body.split("\n", -1).toVector
+    if (lines.headOption.contains(FormatMarker)) {
+      // v2: marker, foldId, schema, cursor, seg lines
+      require(lines(2).nonEmpty)
+      Manifest(lines(1).toLong, lines(2), lines(3).toInt,
+        lines.drop(4).filter(_.nonEmpty).map(parseSegLine), body)
+    } else {
+      // v1 (pre-r12): foldId, schema, seg nonces; bucket sets are
+      // recovered from the segment directories on disk
+      require(lines(1).nonEmpty)
+      val segs = lines.drop(2).filter(_.nonEmpty).map(nonce =>
+        Seg(nonce, bucketsOf(d.resolve("data").resolve(s"seg=$nonce"))))
+      Manifest(lines.head.toLong, lines(1), 0, segs, body)
+    }
   }
+
+  /** The pk buckets a segment directory holds files for (none if absent). */
+  private def bucketsOf(seg: Path): Set[Int] =
+    SegmentLog.listDir(seg).map(_.getFileName.toString)
+      .filter(_.startsWith("pk=")).map(_.stripPrefix("pk=").toInt).toSet
 
   private def segLine(s: Seg): String =
     s"${s.nonce}|${s.buckets.toSeq.sorted.mkString(",")}|" +
@@ -511,27 +447,4 @@ object FoldStore {
   def pk(parts: Int, keys: org.apache.spark.sql.Column*):
       org.apache.spark.sql.Column =
     pmod(xxhash64(keys: _*), lit(parts.toLong)).cast("int")
-
-  /** fsync a directory so a just-completed rename survives power loss
-    * (POSIX: the rename itself is atomic but only durable once the
-    * parent directory's metadata is flushed). Best-effort on
-    * filesystems that refuse directory channels.
-    */
-  private def fsyncDir(d: Path): Unit =
-    try {
-      val ch = FileChannel.open(d, StandardOpenOption.READ)
-      try ch.force(true) finally ch.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  private def listDir(dir: Path): Seq[Path] = {
-    import scala.jdk.CollectionConverters._
-    val s = Files.list(dir)
-    try s.iterator().asScala.toSeq finally s.close()
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) listDir(p).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
-    ()
-  }
 }
