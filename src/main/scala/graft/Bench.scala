@@ -40,7 +40,7 @@ object Bench {
       df.queryExecution.toRdd.count()
     val p0 = System.nanoTime()
     selected.foreach { case (_, fn) =>
-      try force(fn(spark, sfDir)) catch { case _: Throwable => () }
+      try Pin.scope(force(fn(spark, sfDir))) catch { case _: Throwable => () }
     }
     val warmPassSec = (System.nanoTime() - p0) / 1e9
     // 3 timed passes per query, report the per-query MEDIAN: a single
@@ -66,35 +66,13 @@ object Bench {
     val samples = scala.collection.mutable.LinkedHashMap[String, Vector[Sample]](
       names.map(_ -> Vector.empty[Sample]): _*)
     val timed0 = System.nanoTime()
-    // surface dead cached blocks to the ContextCleaner every ~30 queries
-    // (still outside any individual query's timing window):
-    // localCheckpoint blocks from completed plans are unreachable once
-    // their DataFrames drop out of scope, but with a near-idle large heap
-    // the driver may not GC for many minutes, so the blocks linger in the
-    // storage pool and queries contaminate each other (measured at sf3:
-    // q_ccnet_buckets 51.7 -> 81.6 -> 120.0 s across passes in the full
-    // sweep vs flat 38 s standalone).
-    // TWO gc cycles with a real drain window: block cleanup is async —
-    // the first gc enqueues the dead RDDs' weak references, the
-    // ContextCleaner thread then issues unpersist/removeBlock RPCs, and
-    // a second gc catches objects freed by the first wave; 200 ms was
-    // too short for the RPCs to land (sf3 full sweep still grew
-    // 55 -> 78 s on q_ccnet_buckets across passes)
-    def reclaim(): Unit = {
-      System.gc(); Thread.sleep(700)
-      System.gc(); Thread.sleep(700)
-    }
-    // reclaim every ~30 queries, not only at pass boundaries: one pass
-    // of 91 queries itself generates tens of GB of dead checkpoint
-    // blocks at sf3+, so queries late in the alphabet otherwise run
-    // under pressure the early ones never saw
-    val reclaimEvery = 30
-    for (pass <- 1 to nPasses; (name, qi) <- names.zipWithIndex) {
-      if (qi % reclaimEvery == 0) reclaim()
+    // one Pin scope per query: its blocks are freed when it ends, so no
+    // query runs under the dead blocks of the ones before it
+    for (pass <- 1 to nPasses; name <- names) {
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
       try {
-        force(fn(spark, sfDir))
+        Pin.scope(force(fn(spark, sfDir)))
         samples(name) :+= Sample((System.nanoTime() - t0) / 1e9, pass,
           (t0 - timed0) / 1e9)
       }

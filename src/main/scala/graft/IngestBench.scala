@@ -386,13 +386,13 @@ object IngestBench {
     catch { case _: AnalysisException => 0L }
 
   /** Items through the topology per second, with the ledger described in
-    * the object doc. Leaves the session running.
+    * the object doc. Leaves the session running; set-up pins are the run's.
     *
     * @param args `[n] [batches] [...]`, as after the workload name in
     *             `main`
     */
   def run(spark: SparkSession, workload: String,
-      args: Seq[String]): ListMap[String, Any] = {
+      args: Seq[String]): ListMap[String, Any] = Pin.scope {
     val shm = Paths.get("/dev/shm")
     val ctx = new Ctx(spark, Files.createTempDirectory(
       if (Files.isWritable(shm)) shm
@@ -649,23 +649,21 @@ object IngestBench {
   }
 
   /** The standing vector corpus and its frozen trained centroids, both
-    * persisted: built once, pre-timer (the "train once, amortize over
-    * ingest" contract).
+    * pinned for the run: built once, pre-timer (the "train once,
+    * amortize over ingest" contract).
     */
   private def standingVectors(spark: SparkSession,
       standing: Int): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val corpus = spark.range(0, standing.toLong, 1, 8)
+    val corpus = Pin.cache(spark.range(0, standing.toLong, 1, 8)
       .map(i => (i, vecFor(i)))
       .toDF("vec_id", "emb")
-      .withColumn("norm", sqrt(EmbedSim.dot(col("emb"), col("emb"))))
-      .persist()
+      .withColumn("norm", sqrt(EmbedSim.dot(col("emb"), col("emb")))))
     val seedMod = EmbedSim.centroidMod(standing.toLong)
-    val centroids = EmbedSim.trainedCentroids(corpus,
+    val centroids = Pin.cache(EmbedSim.trainedCentroids(corpus,
         corpus.filter(col("vec_id") % seedMod === 0)
           .select(col("vec_id").as("centroid_id"), col("emb").as("cemb"),
-            col("norm").as("cnorm")))
-      .persist()
+            col("norm").as("cnorm"))))
     (corpus, centroids)
   }
 
@@ -679,8 +677,7 @@ object IngestBench {
     */
   private final case class Leg(idCol: String, newBase: Long, unit: String,
       schema: String, leg: IndexLeg, rows: (Long, Long) => DataFrame,
-      counts: (DataFrame, DataFrame) => Seq[(String, Any)],
-      pinned: Seq[DataFrame] = Nil)
+      counts: (DataFrame, DataFrame) => Seq[(String, Any)])
 
   private def indexLeg(ctx: Ctx, name: String): Workload = {
     import ctx.spark
@@ -749,8 +746,7 @@ object IngestBench {
           vectorRows(spark, standing),
           (v, p) => Seq("centroids" -> nCentroids,
             "dropped" -> count(v, !col("keep")),
-            "planted_dropped" -> count(p, !col("keep"))),
-          pinned = Seq(corpus, centroids))
+            "planted_dropped" -> count(p, !col("keep"))))
       case other =>
         throw new IllegalArgumentException(s"unknown workload '$other' " +
           "(text|image|audio|video|embed|reviews|curation|firehose)")
@@ -766,16 +762,14 @@ object IngestBench {
       // covers exactly the timed stream's growth
       warmed = () => Seq("index_start" -> l.leg.indexSize),
       counts = () => {
-        val verdicts = spark.read.parquet(verdictDir)
-          .filter(col(l.idCol) >= l.newBase && col(l.idCol) < l.newBase + n)
-          .persist()
+        val verdicts = Pin.cache(spark.read.parquet(verdictDir)
+          .filter(col(l.idCol) >= l.newBase && col(l.idCol) < l.newBase + n))
         val planted = verdicts.filter((col(l.idCol) - l.newBase) % 10 === 0)
-        try Seq("standing" -> standing.toLong,
+        Seq("standing" -> standing.toLong,
             "verdicts" -> verdicts.count(), "planted" -> planted.count()) ++
           l.counts(verdicts, planted) ++ Seq("index_end" -> l.leg.indexSize)
-        finally verdicts.unpersist()
       },
-      close = () => { l.leg.close(); l.pinned.foreach(_.unpersist()) })
+      close = () => l.leg.close())
   }
 
   private val DocsDdl =
@@ -916,7 +910,6 @@ object IngestBench {
         "text_index_docs" -> textLeg.indexSize),
       close = () => {
         embedLeg.close(); mediaLeg.close(); textLeg.close()
-        corpus.unpersist(); centroids.unpersist()
         try java.sql.DriverManager.getConnection(s"jdbc:derby:$db;drop=true")
         catch { case _: java.sql.SQLException => () } // drop reports 08006
       })

@@ -46,13 +46,13 @@ object PlanAudit {
     spark.sparkContext.setLogLevel("ERROR")
     println(f"${"query"}%-22s shuffles bcast bnlj cartesian pushed")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val a = audit(fn(spark, dir))
+      val a = Pin.scope(audit(fn(spark, dir)))
       println(f"$name%-22s ${a.shuffles}%8d ${a.bcast}%5d ${a.bnlj}%4d " +
         f"${a.cartesian}%9d ${a.pushed}%6b")
     }
     explain.foreach { name =>
       println(s"\n========== $name ==========")
-      SparkEntry.queries(name)(spark, dir).explain("formatted")
+      Pin.scope(SparkEntry.queries(name)(spark, dir).explain("formatted"))
     }
     Queries.clear()
     spark.stop()

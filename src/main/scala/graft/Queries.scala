@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.ops._
 import graft.oracle.{Sql, SqlText}
@@ -25,17 +24,19 @@ object Queries {
     * q_ccnet_buckets 17.3 → 27.3 s on their checkpoints. The sf3+ pool
     * pressure it was introduced for (q_ccnet_buckets 51.7 → 120 s across
     * passes) was dead blocks lingering between passes, cured by the
-    * bench's inter-pass reclaim, not the live set's size. Where the live
+    * query scope ([[Pin]]), not the live set's size. Where the live
     * pinned set does approach the storage pool, size executor storage to
     * it.
     */
   private val memo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String),
       DataFrame]()
+  /** Owns every memo entry and what its build pinned, until [[clear]]. */
+  private val session = new Pin.Scope
   private def memoize(spark: SparkSession, dir: String, what: String)
                      (build: => DataFrame): DataFrame =
-    memo.computeIfAbsent((spark, dir, what), { _ =>
-      val df = build.persist(StorageLevel.MEMORY_AND_DISK)
+    memo.computeIfAbsent((spark, dir, what), _ => session {
+      val df = Pin.cache(build)
       // materialize eagerly: the first consumer query otherwise fans out
       // into several concurrent scans that race to compute the uncached
       // plan (measured 114 s vs 12 s for the MinHash family at sf0.1)
@@ -78,9 +79,7 @@ object Queries {
     * strong session references unboundedly.
     */
   def clear(): Unit = {
-    memo.values.forEach { df =>
-      try df.unpersist(blocking = false) catch { case _: Throwable => () }
-    }
+    try session.close() catch { case _: Throwable => () }
     // operators that persist their own shared subframes (simhashDups'
     // signature index, embedDupsLshOf's corpus) register in the session
     // CacheManager, not the memo — drop those too

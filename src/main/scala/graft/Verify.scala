@@ -25,8 +25,8 @@ object Verify {
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name.parquet")
+      try Pin.scope(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name.parquet"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

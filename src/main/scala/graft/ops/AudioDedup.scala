@@ -128,12 +128,9 @@ object AudioDedup {
     * the audio modality.
     */
   def audioDups(clips: DataFrame,
-      maxHamming: Int = AudHamMax): DataFrame = {
-    val hashes = hashRows(clips)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Perceptual.bandedDups(hashes, "media_id", AudBands, AudBandBits,
+      maxHamming: Int = AudHamMax): DataFrame =
+    Perceptual.bandedDups(hashRows(clips), "media_id", AudBands, AudBandBits,
       maxHamming, "clip_a", "clip_b")
-  }
 
   /** The skinny (media_id, h) fingerprint projection — decode runs ONCE
     * scan-side; these rows ARE the standing acoustic index (a per-clip

@@ -215,9 +215,7 @@ object EmbedLsh {
     // verify join sides), and each re-derivation re-runs the cast /
     // perturb / norm subtree from parquet — persist once, like the
     // signature index a production LSH build would materialize
-    // (CacheManager dedups by plan, so repeated calls share one entry)
-    val corpus = corpusIn
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = graft.Pin.cache(corpusIn)
     // index-build-time sizing decision: ONE count picks the band geometry
     // (the same count the oracle computes in its params CTE)
     val w = bandBits(corpus.count())

@@ -138,7 +138,7 @@ object EmbedPq {
       .select(col("m"), col("code"), col("semb").as("cemb"))
       .withColumn("cn2", dot(col("cemb"), col("cemb")))
     for (_ <- 1 to PqIters) cb = rebuild(subs, assign(subs, cb))
-    cb.localCheckpoint(false)
+    graft.Pin.checkpoint(cb, eager = false)
   }
 
   /** Encode an arbitrary (vec_id, embedding) frame against trained

@@ -240,7 +240,7 @@ object EmbedSim {
     // The lazy localCheckpoint computes training ONCE and turns the
     // centroids into a leaf, exactly the train-once/reuse contract a
     // production IVF index has.
-    cent.localCheckpoint(false)
+    graft.Pin.checkpoint(cent, eager = false)
   }
 
   /** SemDeDup-style pruning decision (Abbas et al. 2023: cluster the
@@ -442,7 +442,7 @@ object EmbedSim {
     // unpersisted frame would re-run the broadcast-argmax assignment
     // per consumer
     val incr = nearestCentroid(embedIncrement(spark, dir), centroids)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Pin.cache)
     val vsIndex = standingAsg.as("a")
       .join(broadcast(incr.as("b")),
         col("a.centroid_id") === col("b.centroid_id"))

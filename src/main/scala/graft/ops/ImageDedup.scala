@@ -135,12 +135,9 @@ object ImageDedup {
     * the image modality.
     */
   def imageDups(images: DataFrame,
-      maxHamming: Int = ImgHamMax): DataFrame = {
-    val hashes = hashRows(images)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Perceptual.bandedDups(hashes, "media_id", ImgBands, ImgBandBits,
-      maxHamming, "img_a", "img_b")
-  }
+      maxHamming: Int = ImgHamMax): DataFrame =
+    Perceptual.bandedDups(hashRows(images), "media_id", ImgBands,
+      ImgBandBits, maxHamming, "img_a", "img_b")
 
   /** The skinny (media_id, h) fingerprint projection: the expensive
     * decode runs ONCE scan-side, payloads never pass this point. These

@@ -17,14 +17,14 @@ import org.apache.spark.sql.functions._
 object Perceptual {
 
   /** Pairs (a, b, hamming) with a < b and hamming <= maxHamming, from a
-    * skinny (id, h) frame. `hashes` MUST already be persisted by the
-    * caller (it is consumed three times: bucketing + both verify sides)
-    * — each modality persists its own projection so the expensive
-    * decode runs once and payloads never pass this point.
+    * skinny (id, h) frame `in`, pinned here (it is consumed three times:
+    * bucketing + both verify sides), so each modality's expensive decode
+    * runs once and payloads never pass this point.
     */
-  private[ops] def bandedDups(hashes: DataFrame, idCol: String,
+  private[ops] def bandedDups(in: DataFrame, idCol: String,
       bands: Int, bandBits: Int, maxHamming: Int,
       outA: String, outB: String): DataFrame = {
+    val hashes = graft.Pin.cache(in)
     val fanout = hashes.sparkSession.sessionState.conf.numShufflePartitions
     val mask = (1L << bandBits) - 1L
     val buckets = hashes
@@ -75,19 +75,15 @@ object Perceptual {
     * frames, silence). Verification is exact bit_count(xor) on
     * candidates only.
     *
-    * `hashes` is persisted here if the caller has not already done so
-    * (it feeds four subtrees: index/fresh bands + both verify sides —
-    * an unpersisted frame built on decode+fingerprint would re-run the
-    * decode per consumer).
+    * `hashes` is pinned here unless already cached (it feeds four
+    * subtrees: index/fresh bands + both verify sides — an unpersisted
+    * frame built on decode+fingerprint would re-run the decode per
+    * consumer).
     */
   private[ops] def bandedDupsIncremental(hashes: DataFrame, idCol: String,
       bands: Int, bandBits: Int, maxHamming: Int, newIdBase: Long,
       outIdx: String, outNew: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val cached =
-      if (hashes.storageLevel == StorageLevel.NONE)
-        hashes.persist(StorageLevel.MEMORY_AND_DISK)
-      else hashes
+    val cached = graft.Pin.cache(hashes)
     bandedDupsAgainst(cached.filter(col(idCol) < newIdBase),
       cached.filter(col(idCol) >= newIdBase), idCol, bands, bandBits,
       maxHamming, outIdx, outNew)
@@ -119,12 +115,9 @@ object Perceptual {
     * (the caller's contract). Both inputs must be cheap to rescan
     * (persisted or a columnar-store read): the index band explode feeds
     * two consumers (the hot-band cap count and the candidate join) and
-    * is deliberately NOT persisted here — the pre-r11 internal persist
-    * leaked cached blocks per call (never unpersisted, fatal for a
-    * per-micro-batch caller), and recomputing a codegen'd explode over
-    * an already-cached (or file-pruned) input is cheaper than owning
-    * distributed cache lifecycle inside an operator that returns a lazy
-    * frame.
+    * is deliberately NOT pinned here — recomputing a codegen'd explode
+    * over an already-cached (or file-pruned) input is cheaper than a
+    * cache per call.
     */
   private[graft] def bandedDupsAgainst(index: DataFrame, fresh: DataFrame,
       idCol: String, bands: Int, bandBits: Int, maxHamming: Int,

@@ -60,7 +60,7 @@ object Ranked {
       // rank branches race to materialize a lazy checkpoint under AQE's
       // concurrent stage submission, while eager materializes once up
       // front
-      .localCheckpoint(true)
+      .transform(graft.Pin.checkpoint(_, eager = true))
     val wLocal = Window.partitionBy(col("_pid"), col(key))
       .orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, -1)

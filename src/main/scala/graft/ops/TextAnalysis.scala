@@ -340,7 +340,7 @@ object TextAnalysis {
       // the salted stream join both hang off the token explode, so the
       // tokenize pass ran twice per execution (plan: 3 parquet scans).
       // Lazy — the first action materializes it. Guide §2.4.
-      .localCheckpoint(false)
+      .transform(graft.Pin.checkpoint(_, eager = false))
     val freq = toks.groupBy("tok").agg(count(lit(1)).as("_f"))
     val scored = Salted.join(toks, freq, Seq("tok"), "doc_id", salts)
       .groupBy("doc_id")
@@ -446,7 +446,7 @@ object TextAnalysis {
     // there); only the final stage waits for the first real action
     val tf = toks.groupBy("doc_id", "word")
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+      .transform(graft.Pin.checkpoint(_, eager = false))
     val dfreq = tf.groupBy("word").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("_n"))
     val scored = tf.join(dfreq, "word")
@@ -548,7 +548,7 @@ object TextAnalysis {
     val bgCount0 = bigrams.groupBy("h1", "hb").agg(count(lit(1)).as("_cb"))
     val bgCount =
       if (ckptCounts)
-        bgCount0.localCheckpoint(false)
+        graft.Pin.checkpoint(bgCount0, eager = false)
       else bgCount0
     val prefCount = bgCount.groupBy("h1").agg(sum(col("_cb")).as("_cp"))
     val scored = Salted.join(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pin
 import TextHash._
 
 /** Deduplication family for large-scale training-data pipelines:
@@ -190,9 +191,9 @@ object TextDedup {
     // no shared exchange below them the ShingleHashes text pass ran three
     // times per execution — same single-materialization rationale as the
     // substring family's gram checkpoint
-    containmentPairsOf(
-      signatures(corpus).select("doc_id", "shingles", "mh", "bands")
-        .localCheckpoint(true))
+    containmentPairsOf(Pin.checkpoint(
+      signatures(corpus).select("doc_id", "shingles", "mh", "bands"),
+      eager = true))
 
   /** Asymmetric shingle containment |A∩B| / |A| (both directions) for the
     * LSH candidates, kept when either direction >= [[ContainMin]] —
@@ -756,7 +757,7 @@ object TextDedup {
     */
   def dedupClusters(corpus: DataFrame, pairs: DataFrame,
       maxRounds: Int = 30): DataFrame = {
-    val p = pairs.select(col("doc_a"), col("doc_b")).persist()
+    val p = Pin.cache(pairs.select(col("doc_a"), col("doc_b")))
     val nPairs = p.count()
     // cap > 0: "cap 0 disables the local tier" must hold for EMPTY pair
     // sets too (r13, advisor note) — specs pinning distributed-loop
@@ -765,7 +766,7 @@ object TextDedup {
     val cap = localEdgeCap(corpus.sparkSession)
     if (cap > 0 && nPairs <= cap) {
       val collected = p.collect().map(r => (r.getLong(0), r.getLong(1)))
-      p.unpersist(blocking = false)
+      Pin.release(p)
       lastStarRounds = 0
       lastStarConverged = true
       return smallGraphClusters(corpus, collected)
@@ -775,7 +776,7 @@ object TextDedup {
         least(col("doc_a"), col("doc_b")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .persist()
+      .transform(Pin.cache)
 
     // (count, hash-xor) signature: order-independent over a DISTINCT edge
     // set (xor would cancel duplicates — the stars end in distinct());
@@ -812,17 +813,17 @@ object TextDedup {
 
     var sig = signature(edges)
     // the canonical edges are materialized in cache now; the pairs can go
-    p.unpersist(blocking = false)
+    Pin.release(p)
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
       // LAZY checkpoint: the plan is truncated either way, and the
       // signature aggregate right below is the action that materializes
       // the checkpointed blocks — one job per round instead of two
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
+      val next = Pin.checkpoint(smallStar(largeStar(edges)), eager = false)
       val nextSig = signature(next)
       converged = nextSig == sig
-      release(edges)
+      Pin.release(edges)
       edges = next
       sig = nextSig
       round += 1
@@ -846,23 +847,9 @@ object TextDedup {
       .join(edges.groupBy(col("u").as("doc_id")).agg(min(col("v")).as("_rep")),
         Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("_rep"), col("doc_id")).as("rep"))
-      .localCheckpoint(true)
-    release(edges)
+      .transform(Pin.checkpoint(_, eager = true))
+    Pin.release(edges)
     withClusterCols(labels)
-  }
-
-  /** Drop a round's edge blocks now, not at the next GC. `unpersist` only
-    * reaches frames the CacheManager holds (the first round's `persist`);
-    * a localCheckpoint frame is a LogicalRDD it never sees, so its blocks
-    * are freed through the RDD itself.
-    */
-  private def release(df: DataFrame): Unit = {
-    df.unpersist(blocking = false)
-    df.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
   }
 
   /** Finalize a (doc_id, rep) label frame to the cluster output contract.
@@ -989,7 +976,7 @@ object TextDedup {
       // native one-pass signature (value-identical to simhashLongRef)
       .select(col("doc_id"),
         graft.functions.SimHashSig(lower(col("text"))).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Pin.cache)
     val fanout =
       corpus.sparkSession.sessionState.conf.numShufflePartitions
     val mask = (1L << SimBandBits) - 1L
@@ -1166,7 +1153,7 @@ object TextDedup {
       // and the kept-join stream both hang off the chunk build, so the
       // words+slice+concat chunking pass ran twice per execution. Lazy
       // per the r13 lazy/eager A/B (OPTIMIZATION_r13.md §3).
-      .localCheckpoint(false)
+      .transform(Pin.checkpoint(_, eager = false))
     // only DUPLICATED chunks need a keeper row (a unique chunk's sole
     // occurrence IS its first occurrence): filtering the join's build
     // side to them keeps it churn-sized — AQE broadcasts it and the
@@ -1238,8 +1225,8 @@ object TextDedup {
       // checkpoint is read by BOTH join branches, and the serialized
       // tier's per-read deserialization measured 23.2 → 58.8 s on
       // q_substring_dedup_bpe at sf1 (r7 same-condition A/B).
-      substrGramPos(substrWordRows(corpus), k)
-        .localCheckpoint(true), k)
+      Pin.checkpoint(substrGramPos(substrWordRows(corpus), k),
+        eager = true), k)
 
   /** The word-split doc stream shared by the substring-dedup family:
     * (doc_id, text, _words). The registry memoizes ONE such frame per
@@ -1381,7 +1368,7 @@ object TextDedup {
       // the increment (a documents scan + filter + rebuild per branch).
       // Lazy per the r13 lazy/eager A/B (OPTIMIZATION_r13.md §3);
       // increment-sized either way.
-      .localCheckpoint(false)
+      .transform(Pin.checkpoint(_, eager = false))
     val grams = base
       .filter(col("n_words") >= k)
       .select(col("doc_id"),
@@ -1390,7 +1377,7 @@ object TextDedup {
       // one materialization, two consumers (keeper agg + the covered
       // join) — same rationale as substringDedup, with the ordering
       // struct derived post-checkpoint
-      .localCheckpoint(true)
+      .transform(Pin.checkpoint(_, eager = true))
       .withColumn("_ord", firstOcc(col("p")))
     val bKeeper = grams.groupBy(col("gh"))
       .agg(min(col("_ord")).as("_keeper"), count(lit(1)).as("_n"))
@@ -1502,7 +1489,7 @@ object TextDedup {
       // relied on, pinned in its spec). Lazy per the r13 lazy/eager A/B
       // (OPTIMIZATION_r13.md §3); the eager gram checkpoint materializes
       // it at construction.
-      .localCheckpoint(false)
+      .transform(Pin.checkpoint(_, eager = false))
     val symsOf = transform(col("_syms"), s => s("sym"))
     val grams = base
       .filter(col("n_tokens") >= k)
@@ -1512,7 +1499,7 @@ object TextDedup {
       // single materialization of the BPE window hashing (see
       // substringDedup — the same checkpoint pin, same tier policy,
       // ordering struct derived post-checkpoint)
-      .localCheckpoint(true)
+      .transform(Pin.checkpoint(_, eager = true))
       .withColumn("_ord", firstOcc(col("p")))
     // duplicated grams only on the build side; affected docs only in the
     // reassembly — see [[substringDedup]] (same two restructures)

@@ -156,7 +156,7 @@ object VideoDedup {
       .select(col("media_id"),
         array_distinct(VideoFrameHashes(col("payload"))).as("hs"))
       .filter(col("hs").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.Pin.cache)
     val hashes = sets.select(col("media_id"), explode(col("hs")).as("h"))
     val fanout = videos.sparkSession.sessionState.conf.numShufflePartitions
     val sizes = sets.select(col("media_id"), size(col("hs")).as("n"))
@@ -260,11 +260,7 @@ object VideoDedup {
     */
   def videoDupsIncremental(hashes: DataFrame,
       overlapMin: Double = OverlapMin): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val cached =
-      if (hashes.storageLevel == StorageLevel.NONE)
-        hashes.persist(StorageLevel.MEMORY_AND_DISK)
-      else hashes
+    val cached = graft.Pin.cache(hashes)
     videoDupsAgainst(cached.filter(col("media_id") < NewMediaBase),
       cached.filter(col("media_id") >= NewMediaBase), overlapMin)
   }
@@ -276,11 +272,8 @@ object VideoDedup {
     * inputs must be cheap to rescan (persisted or columnar-store
     * reads): the `touched` restriction feeds two consumers (the
     * hot-hash cap and the candidate join) and is deliberately NOT
-    * persisted here — the pre-r11 internal persist leaked cached
-    * blocks per call (never unpersisted, an unbounded accumulation for
-    * a per-micro-batch caller), and recomputing a broadcast semi-join
-    * over a cached or file-pruned input is cheaper than owning cache
-    * lifecycle inside an operator returning a lazy frame.
+    * pinned here — recomputing a broadcast semi-join over a cached or
+    * file-pruned input is cheaper than a cache per call.
     */
   private[graft] def videoDupsAgainst(index: DataFrame, fresh: DataFrame,
       overlapMin: Double = OverlapMin): DataFrame = {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Pin
+
 /** The streaming CURATION firehose, composed end-to-end — the
   * training-data sibling of [[Pipeline]]'s review topology: a document
   * stream flows through every admission stage the batch corpus pipeline
@@ -64,39 +66,37 @@ final class CurationPipeline(
 
     val admission = gated.writeStream
       .option("checkpointLocation", s"$checkpointDir/admit")
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val b = batch.toDF().persist()
-        try {
-          if (b.count() > 0) {
-            // the semantic stage: the same per-row fold the standalone
-            // gate runs, joined back on the key — a plain batch join
-            // inside the micro-batch, so no streaming state
-            val semAnn = StreamSemGate.annotate(
-              b.select(col("doc_id").as("vec_id"), col("emb")), sem)
-              .select(col("vec_id").as("doc_id"), col("bench_id"),
-                col("bench_cos"), col("contaminated"))
-            val ann = b.join(semAnn, Seq("doc_id"))
-            val admitted = ann
-              .filter(col("admit") && !col("contaminated"))
-            admitSink.write(admitted.select(
-              col("doc_id").cast("string").as("doc_key"),
-              col("doc_id"), col("text"), col("ts"),
-              col("word_count"), col("mean_word_len"), col("alpha_frac"),
-              col("bench_cos")), id)
-            // reason = FIRST failing stage, in pipeline order
-            val rejected = ann
-              .filter(!(col("admit") && !col("contaminated")))
-              .select(col("doc_id"), col("ts"),
-                when(!col("keep"), concat(lit("gopher:"),
-                    col("reject_reason")))
-                  .when(col("n_shared_grams") > 0, lit("benchmark_gram"))
-                  .otherwise(lit("benchmark_semantic"))
-                  .as("reject_stage"),
-                col("n_shared_grams"), col("bench_cos"))
-            rejectSink.write(rejected, id)
-          }
-        } finally { b.unpersist(); () }
-      }
+      .foreachBatch { (batch: Dataset[Row], id: Long) => Pin.scope {
+        val b = Pin.cache(batch.toDF())
+        if (b.count() > 0) {
+          // the semantic stage: the same per-row fold the standalone
+          // gate runs, joined back on the key — a plain batch join
+          // inside the micro-batch, so no streaming state
+          val semAnn = StreamSemGate.annotate(
+            b.select(col("doc_id").as("vec_id"), col("emb")), sem)
+            .select(col("vec_id").as("doc_id"), col("bench_id"),
+              col("bench_cos"), col("contaminated"))
+          val ann = b.join(semAnn, Seq("doc_id"))
+          val admitted = ann
+            .filter(col("admit") && !col("contaminated"))
+          admitSink.write(admitted.select(
+            col("doc_id").cast("string").as("doc_key"),
+            col("doc_id"), col("text"), col("ts"),
+            col("word_count"), col("mean_word_len"), col("alpha_frac"),
+            col("bench_cos")), id)
+          // reason = FIRST failing stage, in pipeline order
+          val rejected = ann
+            .filter(!(col("admit") && !col("contaminated")))
+            .select(col("doc_id"), col("ts"),
+              when(!col("keep"), concat(lit("gopher:"),
+                  col("reject_reason")))
+                .when(col("n_shared_grams") > 0, lit("benchmark_gram"))
+                .otherwise(lit("benchmark_semantic"))
+                .as("reject_stage"),
+              col("n_shared_grams"), col("bench_cos"))
+          rejectSink.write(rejected, id)
+        }
+      }}
       .start()
 
     val dups = StreamNearDup.nearDups(

@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.streaming.StreamingQuery
+
+import graft.Pin
 
 /** A standing-index streaming dedup leg — the streaming form of the
   * batch incremental contract: every arriving item is signed
@@ -52,7 +53,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
 final class IndexLeg private (
     verdictSink: BatchSink,
     private[graft] val store: FoldStore,
-    spec: IndexLeg.Spec) {
+    spec: IndexLeg.Spec,
+    owned: Pin.Scope) {
 
   /** Distinct items currently standing in the index (diagnostic). */
   def indexSize: Long =
@@ -71,60 +73,51 @@ final class IndexLeg private (
     * index, emit verdicts, fold the batch's canonical rows in. Exposed
     * for the parity specs (same body the streaming query runs).
     */
-  private[graft] def processBatch(b: DataFrame, id: Long): Unit = {
+  private[graft] def processBatch(b: DataFrame, id: Long): Unit = Pin.scope {
     val idCol = spec.idCol
-    val batch = b.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (batch.count() > 0) {
-        // persisted: the signed batch feeds the bucket set, the judge,
-        // the verdict spine and the fold
-        val signed = spec.sign(batch).persist(StorageLevel.MEMORY_AND_DISK)
-        // the batch's touched hash-prefix buckets — a bounded (<=
-        // PrefixParts) driver-side set, the partition-prune decision
-        // exactly like a DPP subquery's
-        val pks = spec.toStored(signed).select(col("pk")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        // the pruned index read is persisted for THIS batch only: the
-        // pairing cores consume the index side twice (hot-bucket cap +
-        // candidate join), and without the cache each consumer would
-        // re-open every pruned segment file — the growth term a
-        // 20-batch image run measured before this cache (batch seconds
-        // 4.1 -> 7.8 as the file count grew)
-        val pruned = store.readFor(pks).drop("pk")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val batchIds = signed.select(col(idCol)).distinct()
-        // replay shield; broadcast: the id set is batch-sized
-        val index = pruned.join(broadcast(batchIds), Seq(idCol), "left_anti")
-        // persisted: feeds both the verdicts and the fold
-        val judged = spec.judge(index, signed)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        verdictSink.write(spec.verdicts(batch, signed, judged), id)
-        if (id > store.lastFoldedId) {
-          // the new-batch-id re-delivery guard: empty in normal
-          // operation and batch-bounded on a re-delivery, so the
-          // broadcast is safe
-          val alreadyStanding = pruned.select(col(idCol))
-            .join(broadcast(batchIds), Seq(idCol), "left_semi")
-            .distinct()
-          val keep = spec.canonical(signed, judged)
-            .join(broadcast(alreadyStanding), Seq(idCol), "left_anti")
-          store.append(spec.toStored(keep), id)
-        }
-        judged.unpersist()
-        pruned.unpersist()
-        signed.unpersist()
+    val batch = Pin.cache(b)
+    if (batch.count() > 0) {
+      // persisted: the signed batch feeds the bucket set, the judge,
+      // the verdict spine and the fold
+      val signed = Pin.cache(spec.sign(batch))
+      // the batch's touched hash-prefix buckets — a bounded (<=
+      // PrefixParts) driver-side set, the partition-prune decision
+      // exactly like a DPP subquery's
+      val pks = spec.toStored(signed).select(col("pk")).distinct()
+        .collect().map(_.getInt(0)).toSeq
+      // the pruned index read is persisted for THIS batch only: the
+      // pairing cores consume the index side twice (hot-bucket cap +
+      // candidate join), and without the cache each consumer would
+      // re-open every pruned segment file — the growth term a
+      // 20-batch image run measured before this cache (batch seconds
+      // 4.1 -> 7.8 as the file count grew)
+      val pruned = Pin.cache(store.readFor(pks).drop("pk"))
+      val batchIds = signed.select(col(idCol)).distinct()
+      // replay shield; broadcast: the id set is batch-sized
+      val index = pruned.join(broadcast(batchIds), Seq(idCol), "left_anti")
+      // persisted: feeds both the verdicts and the fold
+      val judged = Pin.cache(spec.judge(index, signed))
+      verdictSink.write(spec.verdicts(batch, signed, judged), id)
+      if (id > store.lastFoldedId) {
+        // the new-batch-id re-delivery guard: empty in normal
+        // operation and batch-bounded on a re-delivery, so the
+        // broadcast is safe
+        val alreadyStanding = pruned.select(col(idCol))
+          .join(broadcast(batchIds), Seq(idCol), "left_semi")
+          .distinct()
+        val keep = spec.canonical(signed, judged)
+          .join(broadcast(alreadyStanding), Seq(idCol), "left_anti")
+        store.append(spec.toStored(keep), id)
       }
-    } finally { batch.unpersist(); () }
+    }
   }
 
-  /** Release the spec's pinned frames and the durable store's writer
+  /** Release the frames the spec pinned and the durable store's writer
     * lock (the index itself stays on disk; reopen the leg on the same
     * directory to resume).
     */
   def close(): Unit = {
-    spec.pinned.foreach { p =>
-      try p.unpersist(false) catch { case _: Throwable => () }
-    }
+    owned.close()
     store.close()
   }
 }
@@ -162,7 +155,6 @@ object IndexLeg {
     *                    fold (the leg then drops already-standing ids)
     * @param rowPerItem  the store holds one row per item, so its row
     *                    count is the item count (and exposes a twin)
-    * @param pinned      frames the spec persisted, released on close
     */
   final case class Spec(
       idCol: String,
@@ -171,20 +163,23 @@ object IndexLeg {
       judge: (DataFrame, DataFrame) => DataFrame,
       verdicts: (DataFrame, DataFrame, DataFrame) => DataFrame,
       canonical: (DataFrame, DataFrame) => DataFrame,
-      rowPerItem: Boolean = false,
-      pinned: Seq[DataFrame] = Nil)
+      rowPerItem: Boolean = false)
 
   /** Open a leg over a durable index at `indexDir`, seeding it from
     * `standing` (signed-row shape) only when the directory holds no
     * index yet — a restart adopts the durable state and never evaluates
-    * the seed.
+    * the seed. `spec` is built in the leg's own [[Pin.Scope]], so what it
+    * pins lives until [[IndexLeg.close]].
     */
   private[streaming] def open(spark: SparkSession, verdictSink: BatchSink,
-      standing: => DataFrame, indexDir: String, spec: Spec): IndexLeg =
+      standing: => DataFrame, indexDir: String, spec: => Spec): IndexLeg = {
+    val owned = new Pin.Scope
+    val s = owned(spec)
     new IndexLeg(verdictSink,
-      FoldStore.open(spark, indexDir, spec.toStored(standing), PrefixParts,
+      FoldStore.open(spark, indexDir, s.toStored(standing), PrefixParts,
         compactAfter = CompactAfter),
-      spec)
+      s, owned)
+  }
 
   /** Verdicts for the best-match judges (text, media): one row per
     * arriving item — `flagCol` says the item produced signature rows,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Pin
 import graft.ops.Clean
 
 /** The reference's complete topology, wired end-to-end (SURVEY §3):
@@ -40,60 +41,55 @@ final class Pipeline(
     val tagged = Streams.dedupTagged(raw, dedupDelay)
     tagged.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+      .foreachBatch { (b: DataFrame, id: Long) => Pin.scope {
         // persist the NARROW tagged batch (10 cols + flag) so the stateful
         // dedup op runs exactly once; the wide annotate output is persisted
         // below for the cleaned/issues/topic branches. (Measured: this
         // beats caching only the wide annotated frame — building the
         // columnar cache for struct/array-heavy rows costs more than the
         // extra codegen'd annotate pass it saves.)
-        batch.persist()
-        try {
-          // count() is the action that materializes the cache — one full
-          // pass through the stateful dedup op, so its state updates and
-          // commits happen exactly once regardless of what follows. On the
-          // watermark-advance timeout batches (0 rows, every other trigger)
-          // that single cheap job replaces the whole annotate/route/sink
-          // fan-out: empty-batch cost drops from ~1 s of sink jobs
-          // (parquet commit, upsert shuffle, JDBC connection) to one no-op
-          // scan, ~35% of steady-state wall time at 20k-row batches.
-          if (batch.count() > 0) {
-            val fresh = batch.filter(!col("_dup")).drop("_dup")
-            val dupIssues = Pipeline.taggedDuplicateIssues(batch)
-            val ann = Clean.annotate(fresh)
-            ann.persist()
-            try {
-              // (no eager materialization: BlockManager's per-partition
-              // cache locks make the concurrent jobs below compute each
-              // partition exactly once — an up-front count() is a whole
-              // extra pass, measured slower)
-              // The three produce paths are independent jobs over the same
-              // persisted frame and distinct targets (keyed store / issue
-              // dir / topic dir) — submit them CONCURRENTLY so the batch
-              // pays max(sink), not sum(sink). Spark job submission is
-              // thread-safe; failures surface via Await and fail the batch
-              // (at-least-once replay, sinks keyed-idempotent or declared
-              // append-at-least-once).
-              import scala.concurrent.{Await, Future}
-              import scala.concurrent.duration.Duration
-              import Pipeline.sinkEc
-              val writes = Seq(
-                Future(cleanedSink.write(Clean.cleaned(ann), id))(sinkEc),
-                Future(issueSink.write(
-                  Clean.issues(ann).unionByName(dupIssues), id))(sinkEc)) ++
-                // the narrow annotated projection is the "topic" — the
-                // reference's produce to cleaned_reviews that its second
-                // (stats) agent consumes (faust_app.py:156-189).
-                // Downstream stateful queries stream from THIS, not raw:
-                // they must not re-parse + re-annotate every record.
-                annotatedTopic.map(t => Future(
-                  t.write(ann.select(Pipeline.TopicCols.map(col): _*), id))(
-                  sinkEc))
-              writes.foreach(Await.result(_, Duration.Inf))
-            } finally ann.unpersist()
-          }
-        } finally batch.unpersist()
-      }
+        val batch = Pin.cache(b)
+        // count() is the action that materializes the cache — one full
+        // pass through the stateful dedup op, so its state updates and
+        // commits happen exactly once regardless of what follows. On the
+        // watermark-advance timeout batches (0 rows, every other trigger)
+        // that single cheap job replaces the whole annotate/route/sink
+        // fan-out: empty-batch cost drops from ~1 s of sink jobs
+        // (parquet commit, upsert shuffle, JDBC connection) to one no-op
+        // scan, ~35% of steady-state wall time at 20k-row batches.
+        if (batch.count() > 0) {
+          val fresh = batch.filter(!col("_dup")).drop("_dup")
+          val dupIssues = Pipeline.taggedDuplicateIssues(batch)
+          // (no eager materialization: BlockManager's per-partition
+          // cache locks make the concurrent jobs below compute each
+          // partition exactly once — an up-front count() is a whole
+          // extra pass, measured slower)
+          val ann = Pin.cache(Clean.annotate(fresh))
+          // The three produce paths are independent jobs over the same
+          // persisted frame and distinct targets (keyed store / issue
+          // dir / topic dir) — submit them CONCURRENTLY so the batch
+          // pays max(sink), not sum(sink). Spark job submission is
+          // thread-safe; failures surface via Await and fail the batch
+          // (at-least-once replay, sinks keyed-idempotent or declared
+          // append-at-least-once).
+          import scala.concurrent.{Await, Future}
+          import scala.concurrent.duration.Duration
+          import Pipeline.sinkEc
+          val writes = Seq(
+            Future(cleanedSink.write(Clean.cleaned(ann), id))(sinkEc),
+            Future(issueSink.write(
+              Clean.issues(ann).unionByName(dupIssues), id))(sinkEc)) ++
+            // the narrow annotated projection is the "topic" — the
+            // reference's produce to cleaned_reviews that its second
+            // (stats) agent consumes (faust_app.py:156-189).
+            // Downstream stateful queries stream from THIS, not raw:
+            // they must not re-parse + re-annotate every record.
+            annotatedTopic.map(t => Future(
+              t.write(ann.select(Pipeline.TopicCols.map(col): _*), id))(
+              sinkEc))
+          writes.foreach(Await.result(_, Duration.Inf))
+        }
+      }}
       .start()
   }
 }

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.Pin
 import graft.ops.EmbedSim
 
 /** The embedding/semantic leg of the streaming curation firehose — the
@@ -57,10 +57,11 @@ object StreamEmbedDedup {
     */
   def apply(verdictSink: BatchSink, centroids: DataFrame,
       standingAssigned: => DataFrame, indexDir: String,
-      threshold: Double = EmbedSim.DupThreshold): IndexLeg = {
-    val frozen = centroids.persist(StorageLevel.MEMORY_AND_DISK)
+      threshold: Double = EmbedSim.DupThreshold): IndexLeg =
     IndexLeg.open(centroids.sparkSession, verdictSink, standingAssigned,
-      indexDir, IndexLeg.Spec(
+      indexDir, {
+      val frozen = Pin.cache(centroids) // the leg's scope: until close()
+      IndexLeg.Spec(
         idCol = "vec_id",
         // assign to the frozen centroids once per batch
         sign = batch => EmbedSim.assignTo(
@@ -81,7 +82,6 @@ object StreamEmbedDedup {
         canonical = (incr, verdicts) => incr.join(
           verdicts.filter(col("keep")).select(col("vec_id")),
           Seq("vec_id"), "leftsemi"),
-        rowPerItem = true,
-        pinned = Seq(frozen)))
-  }
+        rowPerItem = true)
+    })
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.Pin
 import graft.ops.{TextAnalysis, TextDedup}
 
 /** Streaming ingest gate: benchmark decontamination + Gopher quality
@@ -45,8 +46,9 @@ object StreamGate {
   final class BenchmarkGrams private[StreamGate] (
       private[StreamGate] val grams: DataFrame,
       private[StreamGate] val ids: DataFrame,
-      private[StreamGate] val k: Int) {
-    def unpersist(): Unit = { grams.unpersist(); ids.unpersist() }
+      private[StreamGate] val k: Int,
+      owned: Pin.Scope) {
+    def unpersist(): Unit = owned.close()
   }
 
   /** Build (and cache) the benchmark gram set for [[decontaminateStream]].
@@ -57,10 +59,11 @@ object StreamGate {
       k: Int = TextDedup.ContamGram): BenchmarkGrams = {
     require(!benchmark.isStreaming,
       "the benchmark side of a decontamination gate must be static")
-    val grams = TextDedup.benchGramSet(benchmark, k).cache()
-    val ids = benchmark.select(col("doc_id").as("_bid")).cache()
+    val owned = new Pin.Scope
+    val grams = owned(Pin.cache(TextDedup.benchGramSet(benchmark, k)))
+    val ids = owned(Pin.cache(benchmark.select(col("doc_id").as("_bid"))))
     grams.count(); ids.count() // materialize once, before the first trigger
-    new BenchmarkGrams(grams, ids, k)
+    new BenchmarkGrams(grams, ids, k, owned)
   }
 
   /** The production gate: one streaming sink that, per micro-batch, runs
@@ -95,7 +98,7 @@ object StreamGate {
   def gate(docs: DataFrame, benchmark: DataFrame,
       k: Int = TextDedup.ContamGram): DataFrame =
     gateBatch(docs, new BenchmarkGrams(TextDedup.benchGramSet(benchmark, k),
-      benchmark.select(col("doc_id").as("_bid")), k))
+      benchmark.select(col("doc_id").as("_bid")), k, new Pin.Scope))
 
   /** Fully PER-ROW gate context: the benchmark's gram-hash set and doc-id
     * set as broadcast sorted long arrays — what [[rowGated]] needs to

@@ -21,18 +21,6 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with TestSpark {
 
   private val dir = "/root/testdata/sf0.001"
 
-  /** Iterative operators: the returned frame's lineage embeds EVERY
-    * propagation round (each with the pair pipeline in its history), so a
-    * static whole-plan Exchange count is meaningless — what is bounded is
-    * the per-round shuffle shape (3 key-partitioned exchanges/round, see
-    * TextDedup.dedupClusters). Still audited for cartesian/BNLJ.
-    */
-  private val iterativeExempt =
-    Set("q_dedup_clusters", "q_dedup_clusters_star",
-      // keep-best consumes dedupClusters' labels, so its static plan
-      // embeds every propagation round too
-      "q_dedup_keep_best")
-
   /** Max shuffle-Exchange count per query (measured + headroom 0). */
   private val shuffleBudget = Map(
     // q1/rollup +1 (r12): fanOut guard for the decimal partial agg
@@ -84,6 +72,13 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with TestSpark {
     // band-index join (pinned band exchange + candidate distinct) +
     // verify joins + output sort
     "q_dedup_incremental" -> 3,
+    // both cluster tiers end in a leaf (the driver union-find's local
+    // relation, or the star loop's eager label checkpoint), broadcast
+    // onto the corpus: output sort only
+    "q_dedup_clusters" -> 1, "q_dedup_clusters_star" -> 1,
+    // the memoized label index broadcast into the member join + the
+    // per-cluster best agg + output sort
+    "q_dedup_keep_best" -> 2,
     "q_dedup_events" -> 2, "q_dedup_exact" -> 2, "q_doc_quality" -> 1,
     "q_doc_split" -> 1, "q_mixed_sample" -> 4,
     "q_dup_events" -> 2,
@@ -297,7 +292,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with TestSpark {
       }
     }
     // every registry query is budgeted — a new query must add its row
-    audits.map(_._1).toSet shouldBe (shuffleBudget.keySet ++ iterativeExempt)
+    audits.map(_._1).toSet shouldBe shuffleBudget.keySet
   }
 
   test("streaming standing-index consult plan: the pruned store read " +
