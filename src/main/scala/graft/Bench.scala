@@ -10,9 +10,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // optional comma-separated query subset, for local iteration on one
-    // operator without paying the full 48-query sweep (driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    // operator without paying the full registry sweep (driver never sets it)
+    val names = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // cache-build cost is its own line item, not noise attributed to the
@@ -25,8 +24,6 @@ object Bench {
     // query 3.97 s cold vs 0.72 s warm), making per-query times reflect
     // alphabetical position instead of plan cost. Disclosed as its own
     // field; the timed pass below is steady-state.
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     // Execute the COMPILED physical plan, not Dataset.count(): count()
     // re-optimizes the logical plan under a count aggregate, and Catalyst
     // legitimately deletes work a consumer wouldn't need — e.g. a final
@@ -39,8 +36,9 @@ object Bench {
     def force(df: org.apache.spark.sql.DataFrame): Long =
       df.queryExecution.toRdd.count()
     val p0 = System.nanoTime()
-    selected.foreach { case (_, fn) =>
-      try Pin.scope(force(fn(spark, sfDir))) catch { case _: Throwable => () }
+    names.foreach { name =>
+      try Pin.scope(force(SparkEntry.queries(name)(spark, sfDir)))
+      catch { case _: Throwable => () }
     }
     val warmPassSec = (System.nanoTime() - p0) / 1e9
     // 3 timed passes per query, report the per-query MEDIAN: a single
@@ -55,7 +53,6 @@ object Bench {
     // one-boot slope evidence there). The driver never sets it.
     val nPasses = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(3)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    val names = selected.map(_._1)
     // each sample carries provenance: (duration, pass index, start offset
     // since the timed phase began) — so a dispersion outlier can be
     // checked for co-occurrence with other queries' outliers in the SAME

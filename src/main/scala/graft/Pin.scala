@@ -12,8 +12,9 @@ import org.apache.spark.storage.StorageLevel
   * in `Pipeline`, `IndexLeg` and `CurationPipeline`; or a long-lived
   * `IndexLeg` (its spec's frames, e.g. `StreamEmbedDedup`'s centroids) or
   * `StreamGate.BenchmarkGrams`, whose `close()`/`unpersist()` closes it;
-  * or the session: `Queries` memo entries build in its scope and live
-  * until `Queries.clear`, not with the query that happened to build them.
+  * or the session: a pinned `Queries` memo entry builds in its scope on
+  * whichever thread first reads it (a query, a warmup builder, another
+  * entry's build) and lives until `Queries.clear`, not with that reader.
   *
   * Release rule: a scope frees its frames, newest first, when it exits
   * normally or by exception — a CacheManager unpersist plus

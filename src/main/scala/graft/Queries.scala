@@ -12,30 +12,45 @@ import graft.oracle.{Sql, SqlText}
   */
 object Queries {
 
-  /** Session-scoped memo for DataFrames shared by several registry queries
-    * (the annotated clean pipeline feeds 7 queries; MinHash signatures feed
-    * 2). Verify/Bench run every query in one session, so persisting these
-    * avoids recomputing the regex-heavy pipelines per query. Keyed by
-    * (session, dir), stored deserialized (MEMORY_AND_DISK). The r7 sf1 A/B
-    * priced the serialized tier under one condition: it shrinks the
-    * resident set 2-4× but charges a deserialization per read, and
-    * re-read-heavy consumers pay it many times over — a 10-25% tax across
-    * memo consumers, q_substring_dedup_bpe 23.2 → 58.8 s and
-    * q_ccnet_buckets 17.3 → 27.3 s on their checkpoints. The sf3+ pool
-    * pressure it was introduced for (q_ccnet_buckets 51.7 → 120 s across
-    * passes) was dead blocks lingering between passes, cured by the
-    * query scope ([[Pin]]), not the live set's size. Where the live
-    * pinned set does approach the storage pool, size executor storage to
-    * it.
+  /** The session memo: one map, keyed (session, dir, key), for
+    * [[Tables.load]]'s unexecuted parquet handles (key `<table>.parquet`)
+    * and the pinned frames [[memoize]] builds (a bare key without a dot,
+    * one private accessor per key, which resolves its own dependencies).
+    * Cell rule: `computeIfAbsent` only creates a [[Cell]]; the build runs
+    * in the cell's `lazy val`, outside the map's lock. So a build may read
+    * other entries in any order, concurrent callers of one key build it
+    * once, and a build that throws leaves the cell unset for the next call
+    * to retry. [[clear]] is the only clear, for both key spaces.
+    *
+    * Verify/Bench run every query in one session, so pinning the shared
+    * frames avoids recomputing the regex-heavy pipelines per query. They
+    * are stored deserialized (MEMORY_AND_DISK). The r7 sf1 A/B priced the
+    * serialized tier under one condition: it shrinks the resident set 2-4×
+    * but charges a deserialization per read, and re-read-heavy consumers
+    * pay it many times over — a 10-25% tax across memo consumers,
+    * q_substring_dedup_bpe 23.2 → 58.8 s and q_ccnet_buckets 17.3 → 27.3 s
+    * on their checkpoints. The sf3+ pool pressure it was introduced for
+    * (q_ccnet_buckets 51.7 → 120 s across passes) was dead blocks
+    * lingering between passes, cured by the query scope ([[Pin]]), not the
+    * live set's size. Where the live pinned set does approach the storage
+    * pool, size executor storage to it.
     */
   private val memo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String),
-      DataFrame]()
+      Cell]()
+  private final class Cell(build: => DataFrame) {
+    lazy val df: DataFrame = build
+  }
+  /** The memo's one lookup: `key`'s frame, built on first use. */
+  private[graft] def cell(spark: SparkSession, dir: String, key: String)
+                         (build: => DataFrame): DataFrame =
+    memo.computeIfAbsent((spark, dir, key), _ => new Cell(build)).df
+
   /** Owns every memo entry and what its build pinned, until [[clear]]. */
   private val session = new Pin.Scope
   private def memoize(spark: SparkSession, dir: String, what: String)
                      (build: => DataFrame): DataFrame =
-    memo.computeIfAbsent((spark, dir, what), _ => session {
+    cell(spark, dir, what)(session {
       val df = Pin.cache(build)
       // materialize eagerly: the first consumer query otherwise fans out
       // into several concurrent scans that race to compute the uncached
@@ -44,30 +59,23 @@ object Queries {
       df
     })
 
-  /** Materialize every memoized shared subplan up front. Bench calls this
-    * before timing so cache-build cost is its own line item instead of being
-    * attributed to whichever query alphabetically consumes the memo first
-    * (q_jaccard_pairs absorbed the whole signature build in round 1).
+  /** Materialize the four memo families up front, one thread per family
+    * root; each root's build resolves the memos below it. Bench calls this
+    * before timing so cache-build cost is its own line item instead of
+    * being attributed to whichever query alphabetically consumes the memo
+    * first (q_jaccard_pairs absorbed the whole signature build in round 1).
     */
   def warmup(spark: SparkSession, dir: String): Unit = {
-    // the three subplans are independent and none saturates local[32] on
-    // its own (few input partitions each) — build them concurrently so
-    // warmup wall time is the max, not the sum
-    val builds = Seq[() => Unit](
-      () => { docsAnnotated(spark, dir); () },
-      // candPairs depends on the signature memo — same thread, in order
-      () => { nearSignatures(spark, dir); candPairs(spark, dir); () },
-      () => {
-        memoize(spark, dir, "emb_assigned")(EmbedSim.dupAssigned(spark, dir))
-        ()
-      },
-      // the substring family's shared doc stream + gram frame (r13) —
-      // sequential dependency, own thread
-      () => { substrWords(spark, dir); substrGramsPos(spark, dir); () })
+    // the families are independent and none saturates the cores on its
+    // own (few input partitions each) — build them concurrently so warmup
+    // wall time is the max, not the sum
+    val roots = Seq[(SparkSession, String) => DataFrame](
+      docsAnnotated, candPairs, embAssigned, substrGramsPos)
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
-    val threads = builds.map { b =>
+    val threads = roots.map { root =>
       val t = new Thread(() =>
-        try b() catch { case e: Throwable => failure.compareAndSet(null, e) })
+        try root(spark, dir)
+        catch { case e: Throwable => failure.compareAndSet(null, e) })
       t.start(); t
     }
     threads.foreach(_.join())
@@ -87,7 +95,6 @@ object Queries {
       try k._1.catalog.clearCache() catch { case _: Throwable => () }
     }
     memo.clear()
-    Tables.clear()
   }
 
   /** Session memo over the durable [[IndexStore]]: standing indexes (IVF
@@ -176,41 +183,124 @@ object Queries {
     * pairs, the overlap matrix), and a production dedup service derives
     * the candidate set once per corpus snapshot for all of them.
     */
-  private def candPairs(spark: SparkSession, dir: String): DataFrame = {
-    // resolve the signature memo BEFORE entering computeIfAbsent (r13,
-    // advisor note): ConcurrentHashMap forbids the mapping function from
-    // updating other mappings — a cold session where candpairs computes
-    // before sigs could throw IllegalStateException("Recursive update")
-    val sigs = nearSignatures(spark, dir)
+  private def candPairs(spark: SparkSession, dir: String): DataFrame =
     memoize(spark, dir, "candpairs") {
-      TextDedup.candidatePairs(sigs)
+      TextDedup.candidatePairs(nearSignatures(spark, dir))
     }
-  }
+
+  /** The dedup cluster labels, a standing index like the IVF centroids. */
+  private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
+    durableIndex(spark, dir, "dedup_clusters", "documents", clusterParams) {
+      TextDedup.dedupClusters(Corpus.withNearDups(spark, dir),
+        TextDedup.jaccardPairsOf(nearSignatures(spark, dir),
+          candPairs(spark, dir)))
+    }
 
   /** The word-split boilerplate corpus (doc_id, text, _words) — the
     * substring-dedup family's shared doc stream (r13): q_substring_dedup
     * consumes word windows of it, q_substring_dedup_bpe re-encodes the
     * same words as BPE symbols, and the standing gram index derives from
-    * the same gram frame. Memoized like candPairs: one tokenize pass per
-    * corpus snapshot, built in warmup (counted in the bench total).
+    * the same gram frame. One tokenize pass per corpus snapshot, built in
+    * warmup (counted in the bench total).
     */
-  private def substrWords(spark: SparkSession, dir: String): DataFrame = {
-    val corpus = Corpus.withBoilerplate(spark, dir)
+  private def substrWords(spark: SparkSession, dir: String): DataFrame =
     memoize(spark, dir, "subwords") {
-      TextDedup.substrWordRows(corpus)
+      TextDedup.substrWordRows(Corpus.withBoilerplate(spark, dir))
     }
-  }
 
   /** The positional word-gram frame (doc_id, p, gh) over [[substrWords]]
     * — the materialization q_substring_dedup's keeper/covered branches
     * read and the standing subgram index collapses (per-doc distinct).
     */
-  private def substrGramsPos(spark: SparkSession, dir: String): DataFrame = {
-    val ww = substrWords(spark, dir) // memo dep resolved outside (see candPairs)
+  private def substrGramsPos(spark: SparkSession, dir: String): DataFrame =
     memoize(spark, dir, "subgramspos") {
-      TextDedup.substrGramPos(ww)
+      TextDedup.substrGramPos(substrWords(spark, dir))
     }
-  }
+
+  /** The standing substring gram index. Cold builds collapse the shared
+    * positional gram frame (per-doc distinct ≡ substrGramRows, pinned in
+    * SubstrSharedSpec) instead of re-scanning the corpus (r13).
+    */
+  private def standingSubGrams(spark: SparkSession, dir: String): DataFrame =
+    memoize(spark, dir, "subgrams") {
+      val standing = Corpus.withBoilerplate(spark, dir)
+      val incr = Corpus.substrIncrement(spark, dir)
+      val a = IndexStore.loadOrBuild(spark, "subgrams", standing,
+        substrParams)(TextDedup.substrGramRowsFrom(substrGramsPos(spark, dir)))
+      // publish the merged standing ∪ increment index for tomorrow — one
+      // new segment + manifest, the standing segments untouched
+      IndexStore.mergeOrBuild(spark, "subgrams", standing, incr,
+        substrParams)(TextDedup.substrGramRowsFrom(substrGramsPos(spark, dir)))(
+        TextDedup.substrGramRows(incr))
+      a
+    }
+
+  private def ivfCentroids(spark: SparkSession, dir: String): DataFrame =
+    durableIndex(spark, dir, "ivf_centroids", "embeddings", ivfParams) {
+      EmbedSim.ivfCentroids(spark, dir)
+    }
+
+  private def ivfAssign(spark: SparkSession, dir: String): DataFrame =
+    durableIndex(spark, dir, "ivf_assign", "embeddings", ivfParams) {
+      EmbedSim.standingAssigned(spark, dir, ivfCentroids(spark, dir))
+    }
+
+  private def pqCodebooks(spark: SparkSession, dir: String): DataFrame =
+    durableIndex(spark, dir, "pq_codebooks", "embeddings", pqParams) {
+      EmbedPq.pqCodebooks(spark, dir)
+    }
+
+  private def pqCodes(spark: SparkSession, dir: String): DataFrame =
+    durableIndex(spark, dir, "pq_codes", "embeddings", pqParams) {
+      EmbedPq.pqCodes(spark, dir, pqCodebooks(spark, dir))
+    }
+
+  private def embAssigned(spark: SparkSession, dir: String): DataFrame =
+    memoize(spark, dir, "emb_assigned")(EmbedSim.dupAssigned(spark, dir))
+
+  private def imgHashes(spark: SparkSession, dir: String): DataFrame =
+    memoize(spark, dir, "imghash") {
+      IndexStore.mergeOrBuild(spark, "imghash",
+        ImageDedup.imageTable(spark), ImageDedup.incrementTable(spark),
+        imgHashParams) {
+        ImageDedup.hashRows(ImageDedup.imageTable(spark))
+      } {
+        ImageDedup.hashRows(ImageDedup.incrementTable(spark))
+      }
+    }
+
+  private def audHashes(spark: SparkSession, dir: String): DataFrame =
+    memoize(spark, dir, "audhash") {
+      IndexStore.mergeOrBuild(spark, "audhash",
+        AudioDedup.audioTable(spark), AudioDedup.incrementTable(spark),
+        audHashParams) {
+        AudioDedup.hashRows(AudioDedup.audioTable(spark))
+      } {
+        AudioDedup.hashRows(AudioDedup.incrementTable(spark))
+      }
+    }
+
+  /** The clip count follows the dir's `events` size, counted in the build. */
+  private def vidHashes(spark: SparkSession, dir: String): DataFrame =
+    memoize(spark, dir, "vidhash") {
+      val g = VideoDedup.groupsFor(spark, dir)
+      IndexStore.mergeOrBuild(spark, "vidhash",
+        VideoDedup.videoTable(spark, g), VideoDedup.incrementTable(spark, g),
+        vidHashParams) {
+        VideoDedup.hashRows(VideoDedup.videoTable(spark, g))
+      } {
+        VideoDedup.hashRows(VideoDedup.incrementTable(spark, g))
+      }
+    }
+
+  /** q_video_dups' per-clip frame-hash sets, decoded once per session;
+    * built on first use, not in [[warmup]].
+    */
+  private def videoSets(spark: SparkSession, dir: String): DataFrame =
+    memoize(spark, dir, "vidsets") {
+      VideoDedup.frameSets(
+        VideoDedup.videoTable(spark, VideoDedup.groupsFor(spark, dir)))
+    }
 
   def cleanDocs(spark: SparkSession, dir: String): DataFrame =
     Clean.cleaned(docsAnnotated(spark, dir)).orderBy("review_id")
@@ -331,26 +421,9 @@ object Queries {
     // STANDING gram index (loaded, never rescanned), and the increment's
     // grams folded into the index in O(increment) for day N+1 — the
     // substring sibling of q_dedup_incremental
-    "q_substring_dedup_incr" -> ((s: SparkSession, d: String) => {
-      val standing = Corpus.withBoilerplate(s, d)
-      val incr = Corpus.substrIncrement(s, d)
-      // cold builds of the standing index collapse the family's shared
-      // positional gram frame (per-doc distinct ≡ substrGramRows, pinned
-      // in SubstrSharedSpec) instead of re-scanning the corpus (r13);
-      // memo dep resolved outside computeIfAbsent (see candPairs)
-      val gp = substrGramsPos(s, d)
-      val aGrams = memoize(s, d, "subgrams") {
-        val a = IndexStore.loadOrBuild(s, "subgrams", standing,
-          substrParams)(TextDedup.substrGramRowsFrom(gp))
-        // publish the merged standing ∪ increment index for tomorrow —
-        // one new segment + manifest, the standing segments untouched
-        IndexStore.mergeOrBuild(s, "subgrams", standing, incr,
-          substrParams)(TextDedup.substrGramRowsFrom(gp))(
-          TextDedup.substrGramRows(incr))
-        a
-      }
-      TextDedup.substringDedupIncremental(aGrams, incr)
-    }),
+    "q_substring_dedup_incr" -> ((s: SparkSession, d: String) =>
+      TextDedup.substringDedupIncremental(standingSubGrams(s, d),
+        Corpus.substrIncrement(s, d))),
     "q_minhash_pairs" -> ((s: SparkSession, d: String) =>
       TextDedup.minhashPairsOf(nearSignatures(s, d), candPairs(s, d))),
     "q_jaccard_pairs" -> ((s: SparkSession, d: String) =>
@@ -489,25 +562,11 @@ object Queries {
         k = TextDedup.ContamGramSynthetic)
     }),
     // quality-aware canonical selection: per dedup cluster keep the
-    // highest-quality member (tiebreak min doc_id). The cluster-label
-    // table is memoized as the standing dedup INDEX it is (same contract
-    // as the memoized IVF centroids): built once, policy passes join it —
-    // the full build cost stays measured as q_dedup_clusters' own line.
-    "q_dedup_keep_best" -> ((s: SparkSession, d: String) => {
-      val corpus = Corpus.withNearDups(s, d)
-      // resolve the nested memos BEFORE durableIndex's computeIfAbsent
-      // (r13, advisor note): the build lambda otherwise nests TWO memo
-      // levels (dedup_clusters -> candpairs -> sigs) inside one
-      // ConcurrentHashMap mapping function
-      val sigs = nearSignatures(s, d)
-      val cands = candPairs(s, d)
-      TextDedup.keepBest(
-        durableIndex(s, d, "dedup_clusters", "documents", clusterParams) {
-          TextDedup.dedupClusters(corpus,
-            TextDedup.jaccardPairsOf(sigs, cands))
-        },
-        TextAnalysis.docQuality(corpus))
-    }),
+    // highest-quality member (tiebreak min doc_id) over the memoized
+    // cluster labels
+    "q_dedup_keep_best" -> ((s: SparkSession, d: String) =>
+      TextDedup.keepBest(clusterLabels(s, d),
+        TextAnalysis.docQuality(Corpus.withNearDups(s, d)))),
     // LLM-data-pipeline: text analysis
     "q_lang_id" -> ((s: SparkSession, d: String) =>
       TextAnalysis.langId(Tables.load(s, d, "documents"))),
@@ -579,67 +638,36 @@ object Queries {
     // amortized over probe passes — the production train-once contract
     "q_knn_ivf" -> ((s: SparkSession, d: String) =>
       EmbedSim.knnIvf(s, d, EmbedSim.IvfSalts,
-        Some(durableIndex(s, d, "ivf_centroids", "embeddings", ivfParams) {
-          EmbedSim.ivfCentroids(s, d)
-        }))),
+        Some(ivfCentroids(s, d)))),
     // semantic clustering (SemDeDup-style grouping stage): trained
     // k-means assignment + cluster populations, same memoized index
     "q_kmeans" -> ((s: SparkSession, d: String) =>
       EmbedSim.kmeansAssign(s, d,
-        Some(durableIndex(s, d, "ivf_centroids", "embeddings", ivfParams) {
-          EmbedSim.ivfCentroids(s, d)
-        }))),
+        Some(ivfCentroids(s, d)))),
     // within-cluster diversity sampling (keep the k farthest-from-centroid
     // members per cluster) through the custom bounded-heap TopK operator
     "q_cluster_sample" -> ((s: SparkSession, d: String) =>
       EmbedSim.clusterSample(s, d,
-        Some(durableIndex(s, d, "ivf_centroids", "embeddings", ivfParams) {
-          EmbedSim.ivfCentroids(s, d)
-        }))),
+        Some(ivfCentroids(s, d)))),
     // product-quantized ANN: trained per-subspace codebooks + the encoded
     // corpus are the memoized PQ INDEX; queries score codes alone via ADC
-    "q_knn_pq" -> ((s: SparkSession, d: String) => {
-      val cb = durableIndex(s, d, "pq_codebooks", "embeddings", pqParams) {
-        EmbedPq.pqCodebooks(s, d)
-      }
-      EmbedPq.knnPq(s, d, Some(cb),
-        Some(durableIndex(s, d, "pq_codes", "embeddings", pqParams) {
-          EmbedPq.pqCodes(s, d, cb)
-        }))
-    }),
+    "q_knn_pq" -> ((s: SparkSession, d: String) =>
+      EmbedPq.knnPq(s, d, Some(pqCodebooks(s, d)), Some(pqCodes(s, d)))),
     // IVF-PQ: coarse probes prune WHICH vectors get scored, PQ codes
     // price WHAT each costs — both memoized indexes compose
-    "q_knn_ivfpq" -> ((s: SparkSession, d: String) => {
-      val cb = durableIndex(s, d, "pq_codebooks", "embeddings", pqParams) {
-        EmbedPq.pqCodebooks(s, d)
-      }
-      EmbedPq.knnIvfPq(s, d,
-        Some(durableIndex(s, d, "ivf_centroids", "embeddings", ivfParams) {
-          EmbedSim.ivfCentroids(s, d)
-        }),
-        Some(cb),
-        Some(durableIndex(s, d, "pq_codes", "embeddings", pqParams) {
-          EmbedPq.pqCodes(s, d, cb)
-        }))
-    }),
+    "q_knn_ivfpq" -> ((s: SparkSession, d: String) =>
+      EmbedPq.knnIvfPq(s, d, Some(ivfCentroids(s, d)),
+        Some(pqCodebooks(s, d)), Some(pqCodes(s, d)))),
     "q_embed_dups" -> ((s: SparkSession, d: String) =>
-      EmbedSim.embedDupsOf(memoize(s, d, "emb_assigned") {
-        EmbedSim.dupAssigned(s, d)
-      })),
+      EmbedSim.embedDupsOf(embAssigned(s, d))),
     // the embedding leg of the standing-index contract: today's vector
     // batch assigned to the FROZEN standing centroids (never retrained
     // by an increment), near-dup pairs increment-vs-index only — both
     // the trained centroids and the standing inverted-list assignment
     // are durable IndexStore state, so day N+1 re-scores nothing
-    "q_embed_dups_incr" -> ((s: SparkSession, d: String) => {
-      val cent = durableIndex(s, d, "ivf_centroids", "embeddings", ivfParams) {
-        EmbedSim.ivfCentroids(s, d)
-      }
-      EmbedSim.embedDupsIncremental(s, d, Some(cent),
-        Some(durableIndex(s, d, "ivf_assign", "embeddings", ivfParams) {
-          EmbedSim.standingAssigned(s, d, cent)
-        }))
-    }),
+    "q_embed_dups_incr" -> ((s: SparkSession, d: String) =>
+      EmbedSim.embedDupsIncremental(s, d, Some(ivfCentroids(s, d)),
+        Some(ivfAssign(s, d)))),
     // embedding-space decontamination: nearest-benchmark cosine per
     // training vector (broadcast benchmark, one corpus scan + skinny
     // argmax) — catches the paraphrased leakage n-gram matching misses
@@ -648,22 +676,14 @@ object Queries {
     // SemDeDup-style keep/drop verdicts: within-cluster near-dup pairs
     // (same memoized assignment) pruned min-id-wins
     "q_semdedup" -> ((s: SparkSession, d: String) =>
-      EmbedSim.semDedup(s, d, Some(memoize(s, d, "emb_assigned") {
-        EmbedSim.dupAssigned(s, d)
-      }))),
+      EmbedSim.semDedup(s, d, Some(embAssigned(s, d)))),
     // the decision form of q_embed_dups_incr: keep/drop verdicts for
     // today's batch (min-id-wins over standing ∪ earlier-in-batch
     // near-dups), standing verdicts never re-opened — the full daily
     // loop of a semantic-dedup service over the same durable indexes
-    "q_semdedup_incr" -> ((s: SparkSession, d: String) => {
-      val cent = durableIndex(s, d, "ivf_centroids", "embeddings", ivfParams) {
-        EmbedSim.ivfCentroids(s, d)
-      }
-      EmbedSim.semDedupIncremental(s, d, Some(cent),
-        Some(durableIndex(s, d, "ivf_assign", "embeddings", ivfParams) {
-          EmbedSim.standingAssigned(s, d, cent)
-        }))
-    }),
+    "q_semdedup_incr" -> ((s: SparkSession, d: String) =>
+      EmbedSim.semDedupIncremental(s, d, Some(ivfCentroids(s, d)),
+        Some(ivfAssign(s, d)))),
     // the LSH-bucketed near-dup scale path (random hyperplanes; same
     // corpus + threshold as q_embed_dups, different candidate generation)
     "q_embed_dups_lsh" -> (EmbedLsh.embedDupsLsh _),
@@ -682,18 +702,8 @@ object Queries {
     // (re-ingested assets + genuinely new images) against the STANDING
     // fingerprint index — merged in O(increment) via IndexStore, hot-band
     // cap decided on the index side, increment-sized shuffles only
-    "q_image_dups_incr" -> ((s: SparkSession, d: String) => {
-      val hashes = memoize(s, d, "imghash") {
-        IndexStore.mergeOrBuild(s, "imghash",
-          ImageDedup.imageTable(s), ImageDedup.incrementTable(s),
-          imgHashParams) {
-          ImageDedup.hashRows(ImageDedup.imageTable(s))
-        } {
-          ImageDedup.hashRows(ImageDedup.incrementTable(s))
-        }
-      }
-      ImageDedup.imageDupsIncremental(hashes)
-    }),
+    "q_image_dups_incr" -> ((s: SparkSession, d: String) =>
+      ImageDedup.imageDupsIncremental(imgHashes(s, d))),
     // cross-modal near-dup, audio modality: native 64-bit energy-delta
     // fingerprint over the REAL javax.sound.sampled PCM decode, same
     // banded-hamming shape (shared Perceptual.bandedDups); the oracle
@@ -703,44 +713,22 @@ object Queries {
       AudioDedup.audioDups(AudioDedup.audioTable(s))),
     // the audio twin of q_image_dups_incr: today's batch against the
     // standing acoustic fingerprint index, IndexStore-merged
-    "q_audio_dups_incr" -> ((s: SparkSession, d: String) => {
-      val hashes = memoize(s, d, "audhash") {
-        IndexStore.mergeOrBuild(s, "audhash",
-          AudioDedup.audioTable(s), AudioDedup.incrementTable(s),
-          audHashParams) {
-          AudioDedup.hashRows(AudioDedup.audioTable(s))
-        } {
-          AudioDedup.hashRows(AudioDedup.incrementTable(s))
-        }
-      }
-      AudioDedup.audioDupsIncremental(hashes)
-    }),
+    "q_audio_dups_incr" -> ((s: SparkSession, d: String) =>
+      AudioDedup.audioDupsIncremental(audHashes(s, d))),
     // cross-modal near-dup, video modality: per-frame dHashes (native
     // walker over the REAL raw-DIB AVI decode, sharing the image tier's
     // grid fold bit-for-bit) -> frame-set containment over a capped
     // inverted index; the oracle re-derives every pixel/frame/bit/set
     // by arithmetic, decoder-free
     "q_video_dups" -> ((s: SparkSession, d: String) =>
-      VideoDedup.videoDups(
-        VideoDedup.videoTable(s, VideoDedup.groupsFor(s, d)))),
+      VideoDedup.videoDupsOf(videoSets(s, d))),
     // the video leg of the standing-index contract (completing the
     // incremental symmetry across MinHash bands, substring grams, and
     // image/audio fingerprints): today's clip batch containment-joined
     // against the standing frame-hash inverted index, IndexStore-merged
     // in O(increment), hot-hash cap decided index-side
-    "q_video_dups_incr" -> ((s: SparkSession, d: String) => {
-      val g = VideoDedup.groupsFor(s, d)
-      val hashes = memoize(s, d, "vidhash") {
-        IndexStore.mergeOrBuild(s, "vidhash",
-          VideoDedup.videoTable(s, g), VideoDedup.incrementTable(s, g),
-          vidHashParams) {
-          VideoDedup.hashRows(VideoDedup.videoTable(s, g))
-        } {
-          VideoDedup.hashRows(VideoDedup.incrementTable(s, g))
-        }
-      }
-      VideoDedup.videoDupsIncremental(hashes)
-    })
+    "q_video_dups_incr" -> ((s: SparkSession, d: String) =>
+      VideoDedup.videoDupsIncremental(vidHashes(s, d)))
   )
 
   val oracles: Map[String, String] = Map(

@@ -8,30 +8,23 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType}
   * (`/root/testdata/sf{N}/<name>.parquet`, see TESTDATA.md). */
 object Tables {
 
-  // r13: one datasource resolution per (session, dir, table). Every
-  // spark.read.parquet(path) call builds a fresh InMemoryFileIndex (a
-  // filesystem listing) and re-reads parquet footers for schema
-  // inference — measured ~0.1 s PER CALL at sf0.1, paid at DataFrame
-  // CONSTRUCTION time by every query on every bench pass (~1.5 loads ×
-  // 100 queries × every pass; q_region_revenue alone paid 5 loads ≈
-  // 0.5 s/pass). At 100 TB the re-listing is strictly worse (guide §6:
-  // file listing is driver-side, single-process work; §5: the driver
-  // should do almost no data work) — production engines resolve a
-  // catalog table once per session for exactly this reason. This memo
-  // holds the UNEXECUTED DataFrame handle only: no rows are cached or
-  // persisted, every action still scans the parquet files. Keyed by
-  // session so test suites with many short-lived sessions never see a
-  // stale handle; Queries.clear() drops the map.
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]
-
+  /** The unexecuted handle for `name`, resolved once per (session, dir)
+    * in the session memo ([[Queries.cell]], keyed `<name>.parquet`;
+    * `Queries.clear()` drops it). r13: every spark.read.parquet(path) call
+    * builds a fresh InMemoryFileIndex (a filesystem listing) and re-reads
+    * parquet footers for schema inference — measured ~0.1 s PER CALL at
+    * sf0.1, paid at DataFrame CONSTRUCTION time by every query on every
+    * bench pass (~1.5 loads × 100 queries × every pass; q_region_revenue
+    * alone paid 5 loads ≈ 0.5 s/pass). At 100 TB the re-listing is
+    * strictly worse (guide §6: file listing is driver-side,
+    * single-process work; §5: the driver should do almost no data work)
+    * — production engines resolve a catalog table once per session for
+    * exactly this reason. No rows are cached or persisted: every action
+    * still scans the parquet files.
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    memo.computeIfAbsent((spark, dir, name),
-      _ => spark.read.parquet(s"$dir/$name.parquet"))
-
-  /** Drop every memoized handle (long-lived JVMs accumulate session keys
-    * otherwise — same contract as Queries.clear()). */
-  def clear(): Unit = memo.clear()
+    Queries.cell(spark, dir, s"$name.parquet")(
+      spark.read.parquet(s"$dir/$name.parquet"))
 
   /** `events.ts` has shipped in two physical parquet encodings across
     * testdata generations, so the loader normalizes BOTH to the same

@@ -6,27 +6,15 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // optional comma-separated subset — mirrors Bench's local-iteration
+    // filter (oracle-check ONE query at a big SF without dumping them all)
+    val names = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated subset — mirrors Bench's local-iteration
-    // filter (oracle-check ONE query at a big SF without dumping all 91)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    // fail fast on a misspelled name: an unknown filter entry would
-    // otherwise yield an empty run that exits cleanly and can be
-    // mistaken for a passing oracle check
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: " +
-          unknown.toSeq.sorted.mkString(", "))
-    }
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-      try Pin.scope(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name.parquet"))
+    names.foreach { name =>
+      try Pin.scope(SparkEntry.queries(name)(spark, sfDir).coalesce(1)
+        .write.mode("overwrite").parquet(s"$outDir/$name.parquet"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

@@ -22,7 +22,6 @@ object MinHashSigUtil {
   private val ShingleK = graft.ops.TextDedup.ShingleK
   private val As: Array[Long] = Array.tabulate(K)(affineA)
   private val Bs: Array[Long] = Array.tabulate(K)(affineB)
-  private val Hex = "0123456789abcdef".toCharArray
 
   @inline private def isWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == 0x0b || c == '\f' || c == '\r'

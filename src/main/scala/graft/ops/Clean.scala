@@ -173,11 +173,10 @@ object Clean {
       "spam_check_score" -> when(col("_text_missing"), lit(0.0)).otherwise(
         greatest(lit(0.0), least(lit(1.0),
           lit(1.0) - lit(0.3) * col("_pattern_matches") -
-            when(col("_lcs").getField("punct_spam") / col("_raw_len") > lit(0.3),
+            when(lcs("punct_spam") / col("_raw_len") > lit(0.3),
               lit(0.3)).otherwise(lit(0.0)) -
-            when(col("_lcs").getField("runs4") > 2, lit(0.2))
-              .otherwise(lit(0.0)) -
-            when(col("_lcs").getField("digit") / col("_raw_len") > lit(0.3),
+            when(lcs("runs4") > 2, lit(0.2)).otherwise(lit(0.0)) -
+            when(lcs("digit") / col("_raw_len") > lit(0.3),
               lit(0.3)).otherwise(lit(0.0)))))))
 
     // L5: final score; L6: anomaly flag + stage label + issue accumulation

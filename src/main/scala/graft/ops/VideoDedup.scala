@@ -130,14 +130,23 @@ object VideoDedup {
     * PROJECTION (distinct over already-touched rows), never by a
     * corpus-wide re-aggregation of the standing index.
     */
-  def hashRows(videos: DataFrame): DataFrame = {
-    val sets = Par.fanOut(videos, "media_id")
+  def hashRows(videos: DataFrame): DataFrame =
+    frameSets(videos).select(col("media_id"), explode(col("hs")).as("h"),
+      size(col("hs")).as("n"))
+
+  /** The skinny (media_id, hs) frame of each decodable clip's distinct
+    * frame hashes: decode + per-frame hashing run scan-side; distinct
+    * because containment is set semantics (a doubled frame rate must not
+    * double the intersection). [[videoDupsOf]] reads it twice — the
+    * exploded hashes and the per-clip set sizes, a projection rather than
+    * an aggregation — so a caller that pins it (the session memo) pays the
+    * decode once.
+    */
+  def frameSets(videos: DataFrame): DataFrame =
+    Par.fanOut(videos, "media_id")
       .select(col("media_id"),
         array_distinct(VideoFrameHashes(col("payload"))).as("hs"))
       .filter(col("hs").isNotNull)
-    sets.select(col("media_id"), explode(col("hs")).as("h"),
-      size(col("hs")).as("n"))
-  }
 
   /** Temporal near-dup pairs: (vid_a, vid_b, overlap) with vid_a <
     * vid_b and overlap = |shared distinct frame hashes| / min(|A|, |B|)
@@ -145,20 +154,14 @@ object VideoDedup {
     * in the oracle, no rounding needed.
     */
   def videoDups(videos: DataFrame,
+      overlapMin: Double = OverlapMin): DataFrame =
+    videoDupsOf(frameSets(videos), overlapMin)
+
+  /** [[videoDups]] over already-derived [[frameSets]]. */
+  def videoDupsOf(sets: DataFrame,
       overlapMin: Double = OverlapMin): DataFrame = {
-    // skinny (id, distinct frame hashes) frame: decode + per-frame
-    // hashing run ONCE scan-side; distinct because containment is set
-    // semantics (a doubled frame rate must not double the intersection).
-    // Persisting BEFORE the explode lets the per-clip set size derive
-    // from the same frame with zero additional shuffles — sizes is a
-    // projection, not an aggregation.
-    val sets = Par.fanOut(videos, "media_id")
-      .select(col("media_id"),
-        array_distinct(VideoFrameHashes(col("payload"))).as("hs"))
-      .filter(col("hs").isNotNull)
-      .transform(graft.Pin.cache)
     val hashes = sets.select(col("media_id"), explode(col("hs")).as("h"))
-    val fanout = videos.sparkSession.sessionState.conf.numShufflePartitions
+    val fanout = sets.sparkSession.sessionState.conf.numShufflePartitions
     val sizes = sets.select(col("media_id"), size(col("hs")).as("n"))
     val buckets = hashes
       // pin the inverted-index exchange width (AQE would coalesce the

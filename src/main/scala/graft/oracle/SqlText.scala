@@ -1111,9 +1111,6 @@ object SqlText {
   def dotSql(a: String, b: String): String =
     s"list_reduce(list_transform(range(len($a)), i -> $a[i+1] * $b[i+1]), (x, y) -> x + y)"
 
-  def cosSql(a: String, b: String): String =
-    s"(${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)})))"
-
   private val embCtes: String =
     s"""emb0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
        |  FROM embeddings),

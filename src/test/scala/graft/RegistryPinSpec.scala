@@ -31,8 +31,7 @@ class RegistryPinSpec extends AnyFunSuite with Matchers with TestSpark {
     "q_dedup_clusters_star" -> 8, "q_shard_pack" -> 4,
     "q_decontaminate_bloom" -> 3, "q_embed_dups_lsh" -> 3,
     "q_containment_pairs" -> 2, "q_decontaminate_auto" -> 2,
-    "q_substring_dedup_incr" -> 2, "q_video_dups" -> 2,
-    "q_video_dups_incr" -> 2, "q_chunk_dedup" -> 1, "q_keyterms" -> 1,
+    "q_substring_dedup_incr" -> 2, "q_chunk_dedup" -> 1, "q_keyterms" -> 1,
     "q_rare_tokens" -> 1, "q_substring_dedup_bpe" -> 1)
 
   private lazy val samples: Seq[Sample] = {
